@@ -154,22 +154,30 @@ object EventPipeline {
     * built-ins as an explode + equi-join + group-count (SURVEY.md §2.1
     * E3): scalable (shuffles on (namespace, label) entries, no theta
     * join), and empty selectors match nothing, matching the reference's
-    * labels.Set(...).AsSelector() semantics. */
+    * labels.Set(...).AsSelector() semantics.
+    *
+    * Matches are counted per service ROW, `(uid, resource_version)`: one
+    * micro-batch may carry several versions of one service, each with its
+    * own selector, and counting per uid would pool their selector entries
+    * (a one-label selector then matches nothing, a two-label one also
+    * matches pods carrying only one of its labels). Output columns:
+    * `service_uid, pod_uid, resource_version`. */
   def servicePods(services: DataFrame, pods: DataFrame): DataFrame = {
     val sel = services
-      .select(col("uid").as("service_uid"), col("namespace").as("__ns"), col("selector"))
+      .select(col("uid").as("service_uid"), col("resource_version"),
+        col("namespace").as("__ns"), col("selector"))
       .withColumn("__n_sel", size(col("selector")))
       .filter(col("__n_sel") > 0)
-      .select(col("service_uid"), col("__ns"), col("__n_sel"),
+      .select(col("service_uid"), col("resource_version"), col("__ns"), col("__n_sel"),
         explode(col("selector")).as(Seq("__k", "__v")))
     val podLab = pods
       .select(col("uid").as("pod_uid"), col("namespace").as("__ns"),
         explode(col("labels")).as(Seq("__k", "__v")))
     sel.join(podLab, Seq("__ns", "__k", "__v"))
-      .groupBy(col("service_uid"), col("pod_uid"), col("__n_sel"))
+      .groupBy(col("service_uid"), col("resource_version"), col("pod_uid"), col("__n_sel"))
       .agg(count(lit(1)).as("__matched"))
       .filter(col("__matched") === col("__n_sel"))
-      .select(col("service_uid"), col("pod_uid"))
+      .select(col("service_uid"), col("pod_uid"), col("resource_version"))
   }
 
   /** E4: the two reverse-index projections of the E3 product (reference
@@ -186,7 +194,15 @@ object EventPipeline {
     * addedService / updatedService / deletedService, handler.go:26-69);
     * `pod` holds podName → mini-pod-json for every matched pod. */
   def serviceEvents(services: DataFrame, pods: DataFrame,
-      eventType: String): Dataset[L9Event] = {
+      eventType: String): Dataset[L9Event] =
+    serviceEvents(services, pods, lit(eventType))
+
+  /** P4 with the reason read per row — the streaming gate's `tag` column,
+    * so one call (one selector join) covers every lifecycle tag of a
+    * micro-batch. The pod map joins back on the service row's
+    * `(uid, resource_version)`, the key [[servicePods]] matched on. */
+  def serviceEvents(services: DataFrame, pods: DataFrame,
+      reason: Column): Dataset[L9Event] = {
     val spark = services.sparkSession
     import spark.implicits._
     val matches = servicePods(services, pods)
@@ -196,11 +212,11 @@ object EventPipeline {
     val podMap = matches
       .join(podRows, Seq("pod_uid"))
       .withColumn("__entry", struct(col("__pod_name"), miniPodJson("__pod")))
-      .groupBy(col("service_uid"))
+      .groupBy(col("service_uid").as("uid"), col("resource_version"))
       .agg(map_from_entries(array_sort(collect_list(col("__entry")))).as("__pods"))
     services
       .filter(!col("namespace").isin(SkipNamespaces: _*) && col("name") =!= "kubernetes")
-      .join(podMap, col("uid") === col("service_uid"), "left_outer")
+      .join(podMap, Seq("uid", "resource_version"), "left_outer")
       .select(
         concat(col("uid"), lit("-"), col("resource_version")).as("id"),
         unix_timestamp(current_timestamp()).as("timestamp"),
@@ -208,7 +224,7 @@ object EventPipeline {
         lit("").as("host"),
         lit("").as("message"),
         col("namespace").as("namespace"),
-        lit(eventType).as("reason"),
+        reason.as("reason"),
         col("uid").as("reference_uid"),
         col("name").as("reference_name"),
         col("resource_version").as("reference_version"),

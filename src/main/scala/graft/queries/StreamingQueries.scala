@@ -463,8 +463,8 @@ object StreamingQueries {
     // (transformWithState + RocksDB state store): per-user monotone
     // high-water filter — emit events whose value strictly exceeds all
     // prior values. Final state over the replay equals the batch
-    // running-max window query (the oracle); incremental/TTL behavior
-    // of the same API is pinned by VersionedDedupProcessorSpec.
+    // running-max window query (the oracle); the operator's checkpointed
+    // state is read back and checked by StateStoreReaderSpec.
     Q("stream_monotone_tws",
       """SELECT event_id, user_id, round(value, 4) AS value FROM (
         |  SELECT event_id, user_id, value,

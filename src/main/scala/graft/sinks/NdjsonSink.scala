@@ -65,17 +65,18 @@ object NdjsonSink {
       // The text sink emits part-*.txt[.gz]; the documented K1/K2
       // contract (reference io/flush_s3.go:45-84 `.log.gz` objects) is
       // .log[.gz] — rename through the Hadoop FS API so the same code
-      // holds for file:// and s3a:// paths.
-      try {
-        val hPath = new org.apache.hadoop.fs.Path(target)
-        val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.listStatus(hPath).foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("part-") && n.contains(".txt"))
-            fs.rename(st.getPath,
-              new org.apache.hadoop.fs.Path(hPath, n.replace(".txt", ".log")))
+      // holds for file:// and s3a:// paths. A failed rename fails the
+      // batch: a part file left as .txt is outside the sink's contract.
+      val hPath = new org.apache.hadoop.fs.Path(target)
+      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(hPath).foreach { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("part-") && n.contains(".txt")) {
+          val dst = new org.apache.hadoop.fs.Path(hPath, n.replace(".txt", ".log"))
+          if (!fs.rename(st.getPath, dst))
+            throw new java.io.IOException(s"NdjsonSink: rename of ${st.getPath} to $dst failed")
         }
-      } catch { case _: Throwable => () }
+      }
       files
     } finally strs.unpersist(blocking = false)
   }

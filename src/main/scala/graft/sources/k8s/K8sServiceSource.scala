@@ -19,7 +19,7 @@ import scala.jdk.CollectionConverters._
   * v1.Service → WatchedService: the KubeService fields PLUS the watch
   * line's type, so F1 can emit `deletedService` downstream — the
   * reference's OnDelete path, handler.go:56-64). The natural downstream
-  * is the tagged D2 gate (`StreamPipeline.dedupServicesWatchedTagged`)
+  * is the D2 gate (`StreamPipeline.dedupServicesWatchedTagged`)
   * — exactly the reference's service-informer → version-gate path
   * (main.go:88-90 → handler.go:95-115). Consumers that don't care about
   * lifecycle can still `.as[KubeService]` (the schema is a superset).

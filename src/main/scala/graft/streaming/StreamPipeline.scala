@@ -38,95 +38,32 @@ object StreamPipeline {
   /** Versioned-dedup state for D2. */
   final case class VersionState(maxVersion: Long)
 
-  /** D2 streaming: per-service-UID "pass only strictly newer
-    * resourceVersion" via arbitrary stateful processing (reference
-    * handler.go:95-115; versions compared numerically — documented
-    * divergence from the reference's lexical compare).
-    *
-    * `ttl = Some(...)` arms a processing-time timeout reproducing the
-    * reference's 3600 s cache expiry; with a timeout armed the query
-    * fires on EVERY trigger (even data-less), so pick a real trigger
-    * interval. `ttl = None` keeps state forever (NoTimeout) — the right
-    * mode when the dedup horizon is handled upstream. */
-  def dedupServicesVersioned(services: Dataset[KubeService],
-      ttl: Option[String] = Some("3600 seconds"))(
-      implicit spark: SparkSession): Dataset[KubeService] = {
-    import spark.implicits._
-    val timeoutConf =
-      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    services
-      .groupByKey(_.uid)
-      .flatMapGroupsWithState[VersionState, KubeService](
-        OutputMode.Append, timeoutConf) {
-        (_: String, rows: Iterator[KubeService], state: GroupState[VersionState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var maxSeen = state.getOption.map(_.maxVersion).getOrElse(Long.MinValue)
-            val out = rows.toSeq.sortBy(_.resource_version.toLong).flatMap { s =>
-              val v = s.resource_version.toLong
-              if (v > maxSeen) { maxSeen = v; Some(s) } else None
-            }
-            state.update(VersionState(maxSeen))
-            ttl.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
-  }
-
-  /** D2 + F1 in one stateful pass: the versioned gate ALSO emits the
-    * lifecycle tag — a uid seen for the first time is `addedService`,
-    * every later strictly-newer version is `updatedService` (the
-    * reference's informer add/update callbacks, handler.go:26-69,
-    * reconstructed from the same state the version gate already keeps).
-    * This overload consumes bare [[KubeService]] rows (file replay /
-    * batch fixtures, no watch metadata), so it can never see a delete;
-    * the live watch path carries the watch type and goes through
-    * [[dedupServicesWatchedTagged]], which adds `deletedService`. */
+  /** A service row that passed the D2 gate, with its F1 lifecycle tag. */
   final case class TaggedService(service: KubeService, tag: String)
 
-  def dedupServicesVersionedTagged(services: Dataset[KubeService])(
-      implicit spark: SparkSession): Dataset[TaggedService] = {
-    import spark.implicits._
-    services
-      .groupByKey(_.uid)
-      .flatMapGroupsWithState[VersionState, TaggedService](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[KubeService], state: GroupState[VersionState]) =>
-          var maxSeen = state.getOption.map(_.maxVersion).getOrElse(Long.MinValue)
-          val firstEver = state.getOption.isEmpty
-          var emittedAny = false
-          val out = rows.toSeq.sortBy(_.resource_version.toLong).flatMap { s =>
-            val v = s.resource_version.toLong
-            if (v > maxSeen) {
-              maxSeen = v
-              val tag = if (firstEver && !emittedAny) "addedService"
-                        else "updatedService"
-              emittedAny = true
-              Some(TaggedService(s, tag))
-            } else None
-          }
-          state.update(VersionState(maxSeen))
-          out.iterator
-      }
-  }
-
-  /** The watch-aware D2 + F1 gate for the LIVE service source
-    * ([[graft.sources.k8s.K8sServiceSource]] emits [[WatchedService]]
-    * rows carrying the watch line's type): same strictly-newer
-    * resourceVersion gate, but the lifecycle tag comes from the watch
-    * type itself — the reference's informer callbacks map 1:1
-    * (handler.go:26-69: OnAdd → addedService, OnUpdate →
-    * updatedService, OnDelete → deletedService). A DELETED line carries
-    * a bumped rv, so it passes the gate and emits exactly one
-    * `deletedService`; its state is then dropped (the reference's
-    * OnDelete removes the uid from the informer cache), so a later
-    * re-list of a recreated same-uid service tags as an add again.
-    * Rows with no watch type (e.g. a consumer lifting bare
-    * KubeService) fall back to the state-derived add/update split of
-    * [[dedupServicesVersionedTagged]]. */
+  /** D2 + F1 in one stateful pass — the service side's only version gate:
+    * per service uid, pass only a strictly newer resourceVersion
+    * (reference handler.go:95-115; versions compared numerically — a
+    * documented divergence from the reference's lexical compare) and tag
+    * each passed row with its lifecycle, which the reference's informer
+    * callbacks map 1:1 (handler.go:26-69: OnAdd → addedService, OnUpdate
+    * → updatedService, OnDelete → deletedService). Within a micro-batch
+    * rows are taken in ascending version order, so an out-of-order batch
+    * emits its strictly increasing prefix once each.
+    *
+    * A DELETED line carries a bumped rv, so it passes the gate and emits
+    * exactly one `deletedService`; its state is then dropped (the
+    * reference's OnDelete removes the uid from the informer cache), so a
+    * later re-list of a recreated same-uid service tags as an add again.
+    * Rows with no watch type (file replay, batch fixtures: bare
+    * [[KubeService]] lifted with `WatchedService.of(_, "")`) take the
+    * tag from state: first sight of a uid is `addedService`, every later
+    * strictly-newer version `updatedService`.
+    *
+    * State is kept per uid with no timeout; only a delete removes it. A
+    * TTL on service state (the reference's 3600 s cache expiry) is out
+    * of scope: no gate ran one, and an armed processing-time timeout
+    * makes the query fire on every trigger. */
   def dedupServicesWatchedTagged(services: Dataset[WatchedService])(
       implicit spark: SparkSession): Dataset[TaggedService] = {
     import spark.implicits._
@@ -166,19 +103,14 @@ object StreamPipeline {
       }
   }
 
-  /** Per-micro-batch sink body shared by the service-side queries: one
-    * P4 projection per lifecycle tag present (serviceEvents stamps the
-    * tag as the L9 reason), unioned into one sink write. */
-  private def serviceBatchSink(pods: DataFrame, conf: GraftConfig,
-      tags: Seq[String]): (DataFrame, Long) => Unit = {
+  /** Per-micro-batch sink body of the service-side query: one P4
+    * projection over the whole gated batch (serviceEvents stamps each
+    * row's lifecycle tag as the L9 reason), so the selector join runs
+    * once per micro-batch, then one sink write. */
+  private def serviceBatchSink(pods: DataFrame, conf: GraftConfig): (DataFrame, Long) => Unit = {
     (batch: DataFrame, batchId: Long) =>
-      import org.apache.spark.sql.functions.col
-      val parts = tags.map { t =>
-        EventPipeline.serviceEvents(
-          batch.filter(col("tag") === t).select("service.*"),
-          pods, t).toDF()
-      }
-      val l9 = parts.reduce(_ unionByName _)
+      val l9 = EventPipeline.serviceEvents(
+        batch.select(col("service.*"), col("tag")), pods, col("tag")).toDF()
       conf.sink match {
         case "memory" =>
           graft.sinks.MemoryBatchSink.append(conf.uid, batchId,
@@ -190,31 +122,25 @@ object StreamPipeline {
       ()
   }
 
-  /** The SERVICE-side streaming query (reference main.go service
-    * informer → handler → event_service.go): live/replayed services
-    * through the tagged version gate, then per micro-batch the P4
-    * projection (selector-matched pod map, service L9 synthesis) lands
-    * on the configured sink — the service twin of [[run]]. This
-    * overload is the watch-blind replay path (add/update only); the
-    * live path is [[runServicesWatched]]. */
+  /** The service-side streaming query for bare [[KubeService]] rows (file
+    * replay, no watch metadata): lifted with an empty watch type into
+    * [[runServicesWatched]], so the gate tags add/update from its state
+    * and never sees a delete. */
   def runServices(stream: Dataset[KubeService], pods: DataFrame,
       conf: GraftConfig, checkpoint: String,
       triggerMs: Option[Long] = None): StreamingQuery = {
-    implicit val spark: SparkSession = stream.sparkSession
-    val tagged = dedupServicesVersionedTagged(stream)
-    val trigger = triggerMs.getOrElse(conf.batchIntervalSec * 1000L)
-    tagged.toDF().writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime(trigger))
-      .foreachBatch(serviceBatchSink(pods, conf,
-        Seq("addedService", "updatedService")))
-      .start()
+    val spark = stream.sparkSession
+    import spark.implicits._
+    runServicesWatched(stream.map(WatchedService.of(_, "")), pods, conf,
+      checkpoint, triggerMs)
   }
 
-  /** The LIVE service-side streaming query: [[WatchedService]] rows
-    * (from the live watch source) through the watch-aware tagged gate,
-    * so service deletions land as `deletedService` L9 records — the
+  /** The SERVICE-side streaming query (reference main.go service informer
+    * → handler → event_service.go): [[WatchedService]] rows (from the
+    * live watch source) through the tagged version gate, then per
+    * micro-batch the P4 projection (selector-matched pod map, service L9
+    * synthesis) lands on the configured sink — the service twin of
+    * [[run]]. Service deletions land as `deletedService` L9 records, the
     * reference's OnDelete path end-to-end (handler.go:56-64 →
     * event_service.go:72-112). */
   def runServicesWatched(stream: Dataset[WatchedService], pods: DataFrame,
@@ -227,8 +153,7 @@ object StreamPipeline {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(trigger))
-      .foreachBatch(serviceBatchSink(pods, conf,
-        Seq("addedService", "updatedService", "deletedService")))
+      .foreachBatch(serviceBatchSink(pods, conf))
       .start()
   }
 

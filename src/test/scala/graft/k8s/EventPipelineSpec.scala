@@ -137,6 +137,33 @@ class EventPipelineSpec extends SparkSpec {
     assert(out("none-svc").pod.isEmpty)  // empty selector matches nothing
   }
 
+  test("E3/P4 key on the service row: two versions of one uid in one input " +
+    "each get their own selector's pod map") {
+    // One micro-batch can carry several versions of a service. s1 narrows
+    // its selector from one label to two; s2 repeats a one-label selector.
+    val svcs = Seq(
+      KubeService("s1", "1", "web-svc", "default", Map(), Map(), Map("app" -> "web")),
+      KubeService("s1", "2", "web-svc", "default", Map(), Map(),
+        Map("app" -> "web", "tier" -> "fe")),
+      KubeService("s2", "7", "db-svc", "default", Map(), Map(), Map("app" -> "db")),
+      KubeService("s2", "8", "db-svc", "default", Map(), Map(), Map("app" -> "db")))
+    val ps = Seq(
+      KubePod("p1", "web-a", "default", Map("app" -> "web"), // one of s1@2's labels
+        ts("2024-01-01 08:00:00"), "10.0.0.5", "192.168.0.2"),
+      KubePod("p2", "web-fe", "default", Map("app" -> "web", "tier" -> "fe"),
+        ts("2024-01-01 08:01:00"), "10.0.0.6", "192.168.0.2"),
+      KubePod("p3", "db-a", "default", Map("app" -> "db"),
+        ts("2024-01-01 08:02:00"), "10.0.0.7", "192.168.0.3"))
+    val m = EventPipeline.servicePods(svcs.toDF(), ps.toDF())
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    assert(m == Set(("s1", "p1", "1"), ("s1", "p2", "1"), ("s1", "p2", "2"),
+      ("s2", "p3", "7"), ("s2", "p3", "8")))
+    val out = EventPipeline.serviceEvents(svcs.toDF(), ps.toDF(), "updatedService")
+      .collect().map(e => e.id -> e.pod.keySet).toMap
+    assert(out == Map("s1-1" -> Set("web-a", "web-fe"), "s1-2" -> Set("web-fe"),
+      "s2-7" -> Set("db-a"), "s2-8" -> Set("db-a")))
+  }
+
   test("E3 is namespace-scoped: same-labeled pods elsewhere never match") {
     // Reference k8sclient.go:76-81 lists Pods(namespace) with the selector;
     // a same-labeled pod in another namespace (the normal multi-namespace

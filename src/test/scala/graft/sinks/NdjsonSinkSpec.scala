@@ -55,4 +55,27 @@ class NdjsonSinkSpec extends SparkSpec {
     assert(NdjsonSink.write(df, tmp, "u4", 2L, batchSize = 5) == 0)
     assert(!Files.exists(Paths.get(s"$tmp/u4_2")))
   }
+
+  test("a failed .txt→.log rename fails the write, naming the path") {
+    val tmp = Files.createTempDirectory("ndjson").toString
+    val df = Seq((1L, "a")).toDF("id", "payload")
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.norename.impl", classOf[NoLogRenameFileSystem].getName)
+    try {
+      val e = intercept[java.io.IOException] {
+        NdjsonSink.write(df, s"norename://$tmp", "u5", 3L, batchSize = 5)
+      }
+      assert(e.getMessage.contains(s"$tmp/u5_3/part-"), e.getMessage)
+    } finally conf.unset("fs.norename.impl")
+  }
+}
+
+/** Local FS under its own scheme whose rename to a `.log` name reports
+  * failure (returns false, as object stores may); the commit protocol's
+  * own renames go through untouched. */
+class NoLogRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("norename:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    !dst.getName.contains(".log") && super.rename(src, dst)
 }

@@ -545,9 +545,9 @@ class K8sSourceSpec extends SparkSpec {
       .format("graft.sources.k8s.K8sServiceSource")
       .option("endpoint", srv.url)
       .load()
-      .as(org.apache.spark.sql.Encoders.product[graft.k8s.KubeService])
+      .as(org.apache.spark.sql.Encoders.product[graft.k8s.WatchedService])
     val deduped = graft.streaming.StreamPipeline
-      .dedupServicesVersioned(src, ttl = None)
+      .dedupServicesWatchedTagged(src).select("service.*")
     val q = deduped.writeStream.format("memory").queryName("k8ssvc")
       .outputMode("append").start()
     try {

@@ -34,27 +34,27 @@ class StreamPipelineSpec extends SparkSpec {
   }
 
   test("D2 streaming: only strictly newer resourceVersions pass (numeric)") {
-    val in = MemoryStream[KubeService]
-    // NoTimeout here: an armed processing-time TTL makes the query fire on
-    // every trigger (even data-less), which in this environment costs
-    // dozens of chmod forks per empty batch (no native Hadoop lib →
-    // Shell fallback) — pathological for a unit test. The TTL path is
-    // production configuration; the version-compare logic is identical.
-    val out = StreamPipeline.dedupServicesVersioned(in.toDS(), ttl = None)
+    // The service side's one gate, fed bare services (empty watch type) as
+    // the replay path feeds it: only strictly newer versions pass, an
+    // out-of-order batch emits its ascending prefix, tags come from state.
+    val in = MemoryStream[WatchedService]
+    val out = StreamPipeline.dedupServicesWatchedTagged(in.toDS())
+      .select(col("service.resource_version"), col("tag"))
     val q = out.writeStream.format("memory").queryName("d2out")
       .outputMode(OutputMode.Append).start()
-    def svc(v: String) = KubeService("s1", v, "svc", "default", Map(), Map(), Map())
+    def svc(v: String) = WatchedService("s1", v, "svc", "default", Map(), Map(), Map(), "")
     try {
       in.addData(svc("2"))
       q.processAllAvailable()
-      in.addData(svc("1"))          // stale → dropped
+      in.addData(svc("1"))           // stale → dropped
       q.processAllAvailable()
-      in.addData(svc("10"))         // numerically newer ("10" < "2" lexically!)
+      in.addData(svc("10"), svc("4")) // out of order in one batch: ascending
+      q.processAllAvailable()         // prefix → 4 then 10 ("10" < "2" lexically!)
+      in.addData(svc("10"))          // equal → dropped
       q.processAllAvailable()
-      in.addData(svc("10"))         // equal → dropped
-      q.processAllAvailable()
-      val got = spark.table("d2out").select("resource_version").as[String].collect()
-      assert(got.toSeq == Seq("2", "10"))
+      val got = spark.table("d2out").as[(String, String)].collect()
+      assert(got.toSeq == Seq("2" -> "addedService", "4" -> "updatedService",
+        "10" -> "updatedService"))
     } finally q.stop()
   }
 
@@ -202,6 +202,41 @@ class StreamPipelineSpec extends SparkSpec {
       l.contains("\"reason\":\"updatedService\"")), lines.mkString("\n"))
     // the selector-matched pod map rides in the P4 projection
     assert(lines.forall(_.contains("\"web-0\"")), "pod map missing")
+  }
+
+  test("runServices: the add and two updates of one uid in ONE micro-batch " +
+    "each land with their own version's pod map") {
+    val ckpt = java.nio.file.Files.createTempDirectory("ckptm").toString
+    val in = MemoryStream[KubeService]
+    val pods = Seq(
+      KubePod("p1", "web-0", "default", Map("app" -> "web"),
+        ts("2024-01-01 09:00:00"), "1.2.3.4", "5.6.7.8"),
+      KubePod("p2", "web-fe", "default", Map("app" -> "web", "tier" -> "fe"),
+        ts("2024-01-01 09:00:00"), "1.2.3.5", "5.6.7.8")).toDF()
+    val conf = GraftConfig(uid = "svcmerge", sink = "memory", batchSize = 10)
+    graft.sinks.MemoryBatchSink.clear("svcmerge")
+    def svc(rv: String, sel: Map[String, String]) =
+      KubeService("s1", rv, "web", "default", Map(), Map(), sel)
+    val q = StreamPipeline.runServices(in.toDS(), pods, conf, ckpt,
+      triggerMs = Some(100))
+    try {
+      in.addData(svc("3", Map("app" -> "web")),
+        svc("4", Map("app" -> "web", "tier" -> "fe")),
+        svc("5", Map("app" -> "web")))
+      q.processAllAvailable()
+    } finally q.stop()
+    val lines = graft.sinks.MemoryBatchSink.batches("svcmerge")
+      .flatMap(_._2).flatten
+    val recs = lines.toDF("value")
+      .select(from_json(col("value"),
+        lit("id STRING, reason STRING, pod MAP<STRING, STRING>")).as("r"))
+      .select(col("r.id"), col("r.reason"), map_keys(col("r.pod")))
+      .as[(String, String, Seq[String])].collect()
+      .map(r => r._1 -> (r._2, r._3.sorted)).toMap
+    assert(recs == Map(
+      "s1-3" -> ("addedService", Seq("web-0", "web-fe")),
+      "s1-4" -> ("updatedService", Seq("web-fe")),
+      "s1-5" -> ("updatedService", Seq("web-0", "web-fe"))), lines.mkString("\n"))
   }
 
   test("live service pipeline (runServicesWatched): a DELETED watch line " +
