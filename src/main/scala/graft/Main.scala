@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   *   runMain graft.Main --config cfg.json --watch events.ndjson \
   *     [--objects objects.parquet] [--nodes nodes.parquet] \
-  *     [--checkpoint dir]
+  *     [--checkpoint dir]   (default: <file_sink_dir>/_checkpoints/<uid>)
   *   runMain graft.Main --config cfg.json --endpoint https://apiserver \
   *     [--token t] [--namespace ns] ...
   *
@@ -40,8 +40,7 @@ object Main {
     val objects = dim("objects",
       Seq.empty[graft.k8s.KubeObject].toDF())
     val nodes = dim("nodes", Seq.empty[graft.k8s.KubeNode].toDF())
-    val checkpoint = opts.getOrElse("checkpoint",
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    val checkpoint = opts.getOrElse("checkpoint", defaultCheckpoint(configPath))
     if (!opts.contains("watch") && !opts.contains("endpoint"))
       return graft.streaming.StreamPipeline.runLive(
         configPath, spark, objects, nodes, checkpoint)
@@ -56,6 +55,19 @@ object Main {
       .load()
     graft.streaming.StreamPipeline.runFromConfig(
       configPath, src, objects, nodes, checkpoint)
+  }
+
+  /** A file or s3 config checkpoints under its own sink directory,
+    * `<fileSinkDir>/_checkpoints/<uid>`, so a rerun or restart of the
+    * same config resumes its batch ids instead of starting again at 0
+    * and overwriting the earlier `<uid>_<batchId>` directories. The
+    * in-process memory sink does not outlive the JVM, so it takes a
+    * fresh temp directory. */
+  private def defaultCheckpoint(configPath: String): String = {
+    val conf = graft.k8s.GraftConfig.load(configPath)
+    if (conf.sink == "memory")
+      java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    else s"${conf.fileSinkDir.stripSuffix("/")}/_checkpoints/${conf.uid}"
   }
 
   def main(args: Array[String]): Unit = {

@@ -203,7 +203,10 @@ object GraftConfig {
       batchIntervalSec = int(c, "batch_interval", 30),
       namespaces = strs(root, "namespaces"),
       events = strs(root, "events"),
-      fileSinkDir = str(root, "file_sink_dir", ""),
+      // an s3 config lands at s3a://<aws_bucket>/<prefix> (MIGRATION.md)
+      fileSinkDir = str(root, "file_sink_dir",
+        if (sink == "s3") s"s3a://${str(root, "aws_bucket", "")}/${str(root, "prefix", "")}"
+        else ""),
       // the reference's S3 flusher always gzips (io/flush_s3.go:57-60);
       // its file flusher never does (io/flush_file.go:38-40)
       gzip = bool(root, "gzip", sink == "s3"),

@@ -11,7 +11,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.connector.write.streaming
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -23,10 +22,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (README.md "Limitations": duplicates possible after restart), this
   * connector writes every task to `_temporary/` and publishes files only
   * in the driver-side job commit — a failed/speculative task attempt
-  * leaves nothing visible, and `abort()` removes all staged output. The
-  * foreachBatch path (graft.sinks.NdjsonSink) keeps the count-capped
-  * micro-batch layout; this connector is the planner-integrated form:
-  * `df.write.format("graft.sources.ndjson.NdjsonWriteSource")`.
+  * leaves nothing visible, and `abort()` removes all staged output.
+  *
+  * Batch only: it is the backfill/one-shot writer
+  * (`df.write.format("graft.sources.ndjson.NdjsonWriteSource")`, the
+  * `sink_ndjson_v2` query). Streaming ingest lands through
+  * `StreamPipeline.run` → graft.sinks.NdjsonSink, which keeps the exact
+  * count-capped `<uid>_<batchId>` micro-batch layout.
   *
   * Contract: input schema is exactly ONE string column (serialize with
   * to_json upstream — same discipline as the text/kafka sinks), so the
@@ -70,8 +72,7 @@ private[ndjson] class NdjsonTable(path: String) extends Table with SupportsWrite
   override def name(): String = s"graft-ndjson($path)"
   override def schema(): StructType = new StructType().add("value", StringType)
   override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.STREAMING_WRITE).asJava
+    Set(TableCapability.BATCH_WRITE, TableCapability.TRUNCATE).asJava
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val s = info.schema()
@@ -107,8 +108,6 @@ private[ndjson] class NdjsonWriteBuilder(path: String, queryId: String,
   override def build(): Write = new Write {
     override def toBatch: BatchWrite =
       new NdjsonBatchWrite(path, queryId, doTruncate, opts, hconf)
-    override def toStreaming: streaming.StreamingWrite =
-      new NdjsonStreamingWrite(path, queryId, opts, hconf)
   }
 }
 
@@ -178,65 +177,6 @@ private[ndjson] class NdjsonWriterFactory(path: String, tag: String,
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new NdjsonDataWriter(path, tag, partitionId, taskId, failOnContains,
       maxRecordsPerFile, hconf)
-}
-
-/** Streaming form of the same commit protocol, one commit per epoch —
-  * the planner-integrated twin of the reference's per-batch S3 flush
-  * (flush.go:15-27 flushes one batch at a time; here each micro-batch
-  * is an epoch). Staging is scoped per (query, epoch); final names
-  * carry both, so epochs never collide. Re-commit of a replayed epoch
-  * (restart between sink write and offset commit — the reference's
-  * documented duplicate window) is IDEMPOTENT: a rename whose target
-  * already exists means this epoch's file was already published, and
-  * the staged duplicate is dropped — upgrading the reference's
-  * at-least-once to exactly-once file publish. */
-private[ndjson] class NdjsonStreamingWrite(path: String, queryId: String,
-    opts: Map[String, String], hconf: SerializableHadoopConf)
-    extends streaming.StreamingWrite {
-
-  private val tag = queryId.replaceAll("[^0-9a-zA-Z]", "").take(8)
-
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): streaming.StreamingDataWriterFactory =
-    new NdjsonStreamingWriterFactory(path, tag,
-      opts.getOrElse("failoncontains", ""),
-      opts.getOrElse("maxrecordsperfile", "0").toLong, hconf)
-
-  override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(hconf.value)
-    messages.collect { case NdjsonCommitMessage(tmps, rows) if rows > 0 =>
-      tmps.foreach { tmp =>
-        val src = new Path(tmp)
-        val fin = new Path(root,
-          src.getName.replaceAll("-tid\\d+", s"-$tag-e$epochId"))
-        if (!fs.rename(src, fin)) {
-          if (fs.exists(fin)) fs.delete(src, false) // replayed epoch: keep first
-          else throw new java.io.IOException(
-            s"commit rename failed: $src -> $fin")
-        }
-      }
-    }
-    fs.delete(new Path(root, s"_temporary/$tag-e$epochId"), true)
-  }
-
-  override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(hconf.value)
-    fs.delete(new Path(root, s"_temporary/$tag-e$epochId"), true)
-  }
-}
-
-private[ndjson] class NdjsonStreamingWriterFactory(path: String, tag: String,
-    failOnContains: String, maxRecordsPerFile: Long,
-    hconf: SerializableHadoopConf)
-    extends streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new NdjsonDataWriter(path, s"$tag-e$epochId", partitionId, taskId,
-      failOnContains, maxRecordsPerFile, hconf)
 }
 
 /** One gzip stream per task; rows are never buffered. The staged name

@@ -9,12 +9,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Streaming assembly of the k8stream dataflow (SURVEY.md §3.1 Spark
   * shape): source → eligibility filters → watermarked dedup →
   * stream-static enrichment → L9 projection → count-capped NDJSON sink
-  * via foreachBatch.
+  * via foreachBatch. [[run]] is the one event-side path: every sink
+  * (file, s3, memory) lands through it, from [[runFromConfig]],
+  * [[runLive]] and `graft.Main` alike.
   *
-  * Delivery contract preserved from the reference: at-least-once, sink
-  * write happens before state commit (micro-batch N+1 does not start
-  * until N's sink completes — the reference's backpressure semantic,
-  * flush.go:15-27, is Spark's micro-batch serialization for free).
+  * Delivery contract: the sink write happens before the batch commits
+  * (micro-batch N+1 does not start until N's sink completes — the
+  * reference's backpressure semantic, flush.go:15-27, is Spark's
+  * micro-batch serialization for free). A restart replays an
+  * uncommitted micro-batch under the same batch id, and the NDJSON sink
+  * overwrites `<dir>/<uid>_<batchId>`, so with a replayable source (one
+  * whose replayed batch id carries the same rows) the replay replaces
+  * its own files: every record lands exactly once. The reference's
+  * flusher names files by wall-clock nanos and keeps the duplicates.
   */
 object StreamPipeline {
 
@@ -103,24 +110,30 @@ object StreamPipeline {
       }
   }
 
+  /** Lands one micro-batch of L9 rows on the configured sink — W1/W2/
+    * K1-K3 dispatched on the config twin's `sink` knob (reference
+    * io/config.go:27 "s3 | file | memory"): file and s3 share the NDJSON
+    * writer (an s3 config's `fileSinkDir` is `s3a://<aws_bucket>/<prefix>`,
+    * derived by [[GraftConfig.parse]]), memory is the in-process test
+    * sink. */
+  private def land(l9: DataFrame, conf: GraftConfig, batchId: Long): Unit =
+    conf.sink match {
+      case "memory" =>
+        graft.sinks.MemoryBatchSink.append(conf.uid, batchId, l9, conf.batchSize)
+      case _ =>
+        NdjsonSink.write(l9, conf.fileSinkDir, conf.uid, batchId,
+          conf.batchSize, conf.gzip)
+    }
+
   /** Per-micro-batch sink body of the service-side query: one P4
     * projection over the whole gated batch (serviceEvents stamps each
     * row's lifecycle tag as the L9 reason), so the selector join runs
     * once per micro-batch, then one sink write. */
-  private def serviceBatchSink(pods: DataFrame, conf: GraftConfig): (DataFrame, Long) => Unit = {
+  private def serviceBatchSink(pods: DataFrame, conf: GraftConfig): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) =>
-      val l9 = EventPipeline.serviceEvents(
-        batch.select(col("service.*"), col("tag")), pods, col("tag")).toDF()
-      conf.sink match {
-        case "memory" =>
-          graft.sinks.MemoryBatchSink.append(conf.uid, batchId,
-            l9, conf.batchSize)
-        case _ =>
-          NdjsonSink.write(l9, conf.fileSinkDir, conf.uid, batchId,
-            conf.batchSize, conf.gzip)
-      }
-      ()
-  }
+      land(EventPipeline.serviceEvents(
+        batch.select(col("service.*"), col("tag")), pods, col("tag")).toDF(),
+        conf, batchId)
 
   /** The service-side streaming query for bare [[KubeService]] rows (file
     * replay, no watch metadata): lifted with an empty watch type into
@@ -177,54 +190,10 @@ object StreamPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(trigger))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // E1/E2/P1-P3 run inside the batch (dimensions current per batch),
-        // then W1/W2/K1-K3 dispatched on the config twin's `sink` knob
-        // (reference io/config.go:27 "s3 | file | memory"): file and s3
-        // share the NDJSON writer (an s3 deployment passes an s3a://
-        // fileSinkDir), memory is the driver-held test sink.
-        val l9 = EventPipeline.projectL9(
-          EventPipeline.enrich(batch, objects, nodes))
-        conf.sink match {
-          case "memory" =>
-            graft.sinks.MemoryBatchSink.append(conf.uid, batchId,
-              l9.toDF(), conf.batchSize)
-          case _ =>
-            NdjsonSink.write(l9.toDF(), conf.fileSinkDir, conf.uid, batchId,
-              conf.batchSize, conf.gzip)
-        }
-        ()
+        // E1/E2/P1-P3 run inside the batch (dimensions current per batch).
+        land(EventPipeline.projectL9(
+          EventPipeline.enrich(batch, objects, nodes)).toDF(), conf, batchId)
       }
-      .start()
-  }
-
-  /** The same pipeline landed through the DataSourceV2 streaming sink
-    * (graft.sources.ndjson.NdjsonWriteSource) instead of foreachBatch:
-    * enrichment/projection move INTO the streaming plan (dimensions
-    * join per micro-batch exactly as before — stream-static joins
-    * re-read the static side each batch), serialization is one to_json,
-    * and the connector provides what foreachBatch had to hand-build —
-    * per-epoch staged commit (exactly-once file publish across
-    * restarts, vs the reference's documented duplicate window) and the
-    * batch_size count cap via maxRecordsPerFile. The W1 time half is
-    * the trigger; the count half is the writer's rolling cap. */
-  def runV2(stream: DataFrame, objects: DataFrame, nodes: DataFrame,
-      conf: GraftConfig, checkpoint: String,
-      triggerMs: Option[Long] = None): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    val filtered = EventPipeline.eligible(stream, conf)
-    val deduped = dedupStream(filtered, s"${conf.dedupTtlSec} seconds")
-    val l9 = EventPipeline.projectL9(
-      EventPipeline.enrich(deduped, objects, nodes)).toDF()
-    val lines = l9.select(
-      to_json(struct(l9.columns.map(col): _*)).as("value"))
-    val trigger = triggerMs.getOrElse(conf.batchIntervalSec * 1000L)
-    lines.writeStream
-      .format("graft.sources.ndjson.NdjsonWriteSource")
-      .outputMode(OutputMode.Append)
-      .option("path", s"${conf.fileSinkDir}/${conf.uid}")
-      .option("checkpointLocation", checkpoint)
-      .option("maxRecordsPerFile", conf.batchSize.toString)
-      .trigger(Trigger.ProcessingTime(trigger))
       .start()
   }
 
@@ -234,16 +203,21 @@ object StreamPipeline {
     * violation), start the periodic heartbeat when a hook is configured
     * (the reference's StartHeartbeat goroutine, io/heartbeat.go:17-60;
     * ours is a daemon ticker with process lifetime, like theirs), then
-    * dispatch on the sink knob: the memory sink runs through the
-    * foreachBatch path (driver-held, test double), file/s3 through the
-    * DSv2 connector with its exactly-once epoch commit. */
+    * [[run]] the caller's event stream on the configured sink. */
   def runFromConfig(configPath: String, stream: DataFrame, objects: DataFrame,
       nodes: DataFrame, checkpoint: String, version: String = "graft",
-      triggerMs: Option[Long] = None): StreamingQuery = {
+      triggerMs: Option[Long] = None): StreamingQuery =
+    runConfigured(configPath, stream.sparkSession, _ => stream, objects, nodes,
+      checkpoint, version, triggerMs)
+
+  /** The body [[runFromConfig]] and [[runLive]] share: config, heartbeat,
+    * then [[run]] over the stream the config selects. */
+  private def runConfigured(configPath: String, spark: SparkSession,
+      stream: GraftConfig => DataFrame, objects: DataFrame, nodes: DataFrame,
+      checkpoint: String, version: String, triggerMs: Option[Long]): StreamingQuery = {
     val conf = GraftConfig.load(configPath)
-    Heartbeat.startPeriodic(stream.sparkSession, conf, version)
-    if (conf.sink == "memory") run(stream, objects, nodes, conf, checkpoint, triggerMs)
-    else runV2(stream, objects, nodes, conf, checkpoint, triggerMs)
+    Heartbeat.startPeriodic(spark, conf, version)
+    run(stream(conf), objects, nodes, conf, checkpoint, triggerMs)
   }
 
   // ----------------------------------------- config → live source plumbing
@@ -294,11 +268,7 @@ object StreamPipeline {
     * k8sclient.go:124-159; empty = enrich-with-nulls). */
   def runLive(configPath: String, spark: SparkSession, objects: DataFrame,
       nodes: DataFrame, checkpoint: String, version: String = "graft",
-      triggerMs: Option[Long] = None): StreamingQuery = {
-    val conf = GraftConfig.load(configPath)
-    Heartbeat.startPeriodic(spark, conf, version)
-    val stream = liveEventStream(spark, conf)
-    if (conf.sink == "memory") run(stream, objects, nodes, conf, checkpoint, triggerMs)
-    else runV2(stream, objects, nodes, conf, checkpoint, triggerMs)
-  }
+      triggerMs: Option[Long] = None): StreamingQuery =
+    runConfigured(configPath, spark, liveEventStream(spark, _), objects, nodes,
+      checkpoint, version, triggerMs)
 }

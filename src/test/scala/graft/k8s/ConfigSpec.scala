@@ -31,6 +31,7 @@ class ConfigSpec extends AnyFunSuite {
     assert(c.s3Prefix == "ev" && c.s3Region == "r1" && c.s3Bucket == "b1"
       && c.s3Profile == "p1")
     assert(c.gzip, "the s3 sink gzips by default (io/flush_s3.go:57-60)")
+    assert(c.fileSinkDir == "s3a://b1/ev")
   }
 
   test("minimal file-sink config takes every documented default") {

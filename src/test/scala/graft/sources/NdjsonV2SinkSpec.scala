@@ -77,39 +77,6 @@ class NdjsonV2SinkSpec extends SparkSpec {
     assert(listNames(s"$dir/_temporary").isEmpty)
   }
 
-  test("streaming write: one commit per epoch, epoch-tagged names, " +
-    "restart appends without collision") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = Files.createTempDirectory("ndjv2s").toString + "/out"
-    val ckpt = Files.createTempDirectory("ndjv2s").toString + "/ckpt"
-    val in = MemoryStream[String]
-    def start() = in.toDF().writeStream.format(fmt)
-      .option("path", dir).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    val q1 = start()
-    try {
-      in.addData("""{"id":1}""", """{"id":2}""")
-      q1.processAllAvailable()
-      in.addData("""{"id":3}""")
-      q1.processAllAvailable()
-    } finally q1.stop()
-    val afterTwo = listNames(dir).filter(_.startsWith("part-"))
-    assert(afterTwo.nonEmpty && afterTwo.forall(_.contains("-e")),
-      s"epoch tag missing: $afterTwo")
-    // Restart from the checkpoint: a new epoch appends alongside the
-    // published ones (no truncation, no collision).
-    val q2 = start()
-    try {
-      in.addData("""{"id":4}""", """{"id":5}""")
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val back = spark.read.schema("id BIGINT").json(dir)
-    assert(back.count() == 5)
-    assert(back.agg(sum("id")).as[Long].head() == 15L)
-    assert(listNames(s"$dir/_temporary").isEmpty) // all epochs cleaned
-  }
-
   test("maxRecordsPerFile rolls chunks: no published file exceeds the cap") {
     val dir = Files.createTempDirectory("ndjv2").toString + "/out"
     (1 to 25).map(_.toLong).toDF("id")
@@ -182,28 +149,6 @@ class NdjsonV2SinkSpec extends SparkSpec {
         .mode("overwrite").save()
       assert(listNames(s"$tmp/out").contains("_SUCCESS"))
     } finally spark.sparkContext.hadoopConfiguration.unset("fs.sprobe.impl")
-  }
-
-  test("streaming object layout matches the reference: " +
-    "<prefix>/<uid>/<file>.log.gz with the epoch in the object name") {
-    // io/flush_s3.go:62-73: key = <prefix>/<uid>/<filename>.log.gz —
-    // runV2 points the connector at <fileSinkDir>/<uid>, so published
-    // objects land one directory under the prefix, epoch-tagged.
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prefix = Files.createTempDirectory("layout").toString
-    val ckpt = Files.createTempDirectory("layoutck").toString
-    val in = MemoryStream[String]
-    val q = in.toDF().select(to_json(struct(col("value"))).as("value"))
-      .writeStream.format(fmt)
-      .option("path", s"$prefix/uid-7")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try { in.addData("a", "b"); q.processAllAvailable() } finally q.stop()
-    val names = listNames(s"$prefix/uid-7").filter(_.startsWith("part-"))
-    assert(names.nonEmpty)
-    assert(names.forall(n => n.contains("-e0") && n.endsWith(".log.gz")),
-      s"epoch-tagged .log.gz objects under <prefix>/<uid>, got $names")
   }
 
   test("schema contract: more than one column is rejected") {

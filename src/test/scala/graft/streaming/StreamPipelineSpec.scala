@@ -139,40 +139,42 @@ class StreamPipelineSpec extends SparkSpec {
       s"expected part-*.log files, got ${names.mkString(",")}")
   }
 
-  test("full pipeline through the DSv2 streaming sink (runV2): " +
-    "same records, epoch-committed gzip files, count cap holds") {
-    val tmp = java.nio.file.Files.createTempDirectory("pipe2").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt2").toString
+  test("replay law: an uncommitted micro-batch re-run under the same " +
+    "batch id overwrites its own files, so every record lands once") {
+    val tmp = java.nio.file.Files.createTempDirectory("replay").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("ckptr").toString
     val in = MemoryStream[KubeEvent]
-    val objects = Seq(KubeObject("o1", "Pod", "default", "w",
-      Map("app" -> "w"), Map(),
-      """{"uid":"o1","name":"w","namespace":"default","start_time":"2024-01-01T09:00:00","ip":"1.2.3.4","host_ip":"5.6.7.8"}""")).toDF()
-    val nodes = Seq(KubeNode("n1", Seq("5.6.7.8"))).toDF()
-    val conf = GraftConfig(uid = "pipe2", batchSize = 2, fileSinkDir = tmp)
-    val q = StreamPipeline.runV2(in.toDF(), objects, nodes, conf, ckpt,
+    val objects = Seq.empty[KubeObject].toDF()
+    val nodes = Seq.empty[KubeNode].toDF()
+    val conf = GraftConfig(uid = "rp", batchSize = 2, fileSinkDir = tmp)
+    def ev(uid: String) = KubeEvent(uid, ts("2024-01-01 10:00:00"),
+      uid, "default", "Scheduled", s"m-$uid", "Normal", Some(1),
+      ObjectRef("v1", "Pod", "w", "default", "1", "o1"), EventSource("kubelet", "n1"))
+    def start() = StreamPipeline.run(in.toDF(), objects, nodes, conf, ckpt,
       triggerMs = Some(100))
-    def ev(uid: String, ns: String) = KubeEvent(uid, ts("2024-01-01 10:00:00"),
-      uid, ns, "Scheduled", s"m-$uid", "Normal", Some(1),
-      ObjectRef("v1", "Pod", "w", ns, "1", "o1"), EventSource("kubelet", "n1"))
+    val q1 = start()
     try {
-      // 3 eligible events with cap 2 → the connector must roll chunks.
-      in.addData(ev("a", "default"), ev("b", "default"),
-        ev("d", "default"), ev("c", "kube-system"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val outDir = s"$tmp/pipe2"
-    val written = spark.read.json(outDir)
-    assert(written.count() == 3) // c filtered out (kube-system)
-    assert(written.filter(col("id") === "a")
-      .select("labels.app").as[String].head() == "w")
-    val names = new java.io.File(outDir).listFiles().map(_.getName)
-      .filter(_.startsWith("part-"))
-    assert(names.forall(_.endsWith(".log.gz")), names.mkString(","))
-    // batch_size law inside the connector: no file exceeds 2 records.
-    for (n <- names) {
-      val c = spark.read.json(s"$outDir/$n").count()
-      assert(c <= 2, s"$n holds $c rows > batchSize cap")
-    }
+      in.addData(ev("a"), ev("b"))
+      q1.processAllAvailable()
+      in.addData(ev("c"), ev("d"), ev("e"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    // Forget the last commit: the restarted query re-runs that batch
+    // under the same id, as after a crash between sink write and commit.
+    val commits = new java.io.File(s"$ckpt/commits")
+    val last = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit))
+      .map(_.toLong).max
+    assert(new java.io.File(commits, last.toString).delete())
+    new java.io.File(commits, s".$last.crc").delete()
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(new java.io.File(commits, last.toString).exists(), "batch not replayed")
+    val ids = spark.read.json(s"$tmp/rp_*").select("id").as[String].collect().sorted
+    assert(ids.toSeq == Seq("a", "b", "c", "d", "e"), s"each record once: ${ids.toSeq}")
+    // the replayed batch's directory holds one batch's files: ceil(3/2)
+    val parts = new java.io.File(tmp, s"rp_$last").listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".log"))
+    assert(parts.length == 2, parts.mkString(","))
   }
 
   test("service-side pipeline (runServices): versioned gate tags " +
