@@ -1,83 +1,110 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.SerializableHadoopConf
+import java.io.{BufferedOutputStream, ByteArrayOutputStream, IOException}
+import java.util.zip.GZIPOutputStream
+import org.apache.hadoop.fs.Path
+import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Batch-windowed NDJSON sink — the W1/W2/K1/K2 tail of the reference
   * pipeline (SURVEY.md §2.1).
   *
-  * Semantics reproduced:
-  *  - W2: one JSON object per line (Spark's json sink is NDJSON natively;
-  *    we serialize explicitly with to_json to control the payload).
-  *  - W1 count cap: a micro-batch with n records is split into
-  *    ceil(n / batchSize) files, so no file exceeds batchSize records
-  *    (the count half of the count-or-time window; the time half is the
-  *    streaming trigger interval). Round-robin repartition bounds every
-  *    partition at ceil(n/files) ≤ batchSize.
-  *  - K1/K2 naming: <dir>/<uid>_<batchId>/part-*.log[.gz]; gzip via the
-  *    standard codec (streams straight into the file, no intermediates).
+  *  - W2: one JSON object per line, serialized once with to_json.
+  *  - W1 count cap: n records land as exactly ceil(n / batchSize) files;
+  *    file k holds global indexes [k·batchSize, (k+1)·batchSize) (the
+  *    count half of the count-or-time window; the time half is the
+  *    streaming trigger interval).
+  *  - K1/K2: <dir>/<uid>_<batchId>/part-<k>.log[.gz], then `_SUCCESS`.
+  *    A gzip file is one gzip member per input partition it spans,
+  *    concatenated: one valid gzip file (RFC 1952 §2.2) that
+  *    `GZIPInputStream`, Hadoop's codec and `zcat` read whole.
   *  - Batch id comes from foreachBatch (monotonic), not wall-clock nanos —
-  *    a deliberate divergence from io/batch.go:8-10 (restart-safe).
-  *
-  * At scale: writers are one task per file, no driver materialization;
-  * the only coordination is the count() to size the file set.
+  *    a deliberate divergence from io/batch.go:8-10 (restart-safe): a
+  *    re-run batch id overwrites `<uid>_<batchId>`.
   */
 object NdjsonSink {
 
   /** Write one micro-batch (or one batch DataFrame) as count-capped
-    * NDJSON files. Returns the number of files written.
+    * NDJSON files in two Spark jobs (one for an empty input). Returns
+    * the number of files written.
     *
-    * Chunk routing is EXACT: rows get a global index (zipWithIndex — one
-    * extra lightweight job) and chunk k = index / batchSize maps to
-    * partition k via an identity partitioner. A plain round-robin
-    * `repartition(files)` does NOT guarantee the cap — each source
-    * partition round-robins from a random offset, so target partitions
-    * can exceed batchSize (caught by the batch-partitioning property
-    * test). */
+    *  - Job 1 persists the serialized lines and collects per-partition
+    *    row counts, which give each partition's global offset. A plain
+    *    round-robin `repartition(files)` does NOT guarantee the cap
+    *    (caught by the batch-partitioning property test). The lines are
+    *    pinned so job 2 sees the rows job 1 counted, even for a
+    *    non-deterministic input.
+    *  - Job 2: each partition packs the rows of every chunk it overlaps
+    *    into one member (gzip or plain), so compression runs on every
+    *    partition; the members shuffle to `files` writers, and writer k
+    *    concatenates them in partition order into a file staged under
+    *    its task attempt's name.
+    *  - The driver publishes each file with one rename (a failed rename
+    *    raises an `IOException` naming the path) and always removes the
+    *    staging directory. */
   def write(batch: DataFrame, dir: String, uid: String, batchId: Long,
       batchSize: Int, gzip: Boolean = false): Int = {
-    val spark = batch.sparkSession
-    val lines = batch.select(to_json(struct(batch.columns.map(col): _*)).as("value"))
-    // Persist BEFORE counting: the count and the routing pass below must
-    // see the same rows. Without the pin, a non-deterministic input (a
-    // sample, an unordered limit, a changed source) could produce more
-    // rows on re-execution than n, yielding chunk keys ≥ files and a
-    // failed job — and every batch would pay the lineage twice.
-    val strs = lines.toDF().rdd.map(_.getString(0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val lines = batch.select(to_json(struct(batch.columns.map(col): _*)))
+      .queryExecution.toRdd.map(_.getUTF8String(0).copy().getBytes)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val n = strs.count()
+      val counts = lines.mapPartitions(it => Iterator.single(it.size.toLong)).collect()
+      val starts = counts.scanLeft(0L)(_ + _)
+      val n = starts.last
       if (n == 0) return 0
-      val files = math.max(1, math.ceil(n.toDouble / batchSize).toInt)
-      val routed = strs
-        .zipWithIndex()
-        .map { case (s, i) => ((i / batchSize).toInt, s) }
-        .partitionBy(new org.apache.spark.Partitioner {
-          override def numPartitions: Int = files
-          override def getPartition(key: Any): Int = key.asInstanceOf[Int]
-        })
-        .values
-      import spark.implicits._
-      val writer = spark.createDataset(routed).toDF("value")
-        .write.mode("overwrite")
-      val target = s"$dir/${uid}_$batchId"
-      (if (gzip) writer.option("compression", "gzip") else writer).text(target)
-      // The text sink emits part-*.txt[.gz]; the documented K1/K2
-      // contract (reference io/flush_s3.go:45-84 `.log.gz` objects) is
-      // .log[.gz] — rename through the Hadoop FS API so the same code
-      // holds for file:// and s3a:// paths. A failed rename fails the
-      // batch: a part file left as .txt is outside the sink's contract.
-      val hPath = new org.apache.hadoop.fs.Path(target)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(hPath).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("part-") && n.contains(".txt")) {
-          val dst = new org.apache.hadoop.fs.Path(hPath, n.replace(".txt", ".log"))
-          if (!fs.rename(st.getPath, dst))
-            throw new java.io.IOException(s"NdjsonSink: rename of ${st.getPath} to $dst failed")
+      val files = ((n + batchSize - 1) / batchSize).toInt
+      val hconf = new SerializableHadoopConf(batch.sparkSession.sessionState.newHadoopConf())
+      val dirPath = new Path(s"$dir/${uid}_$batchId")
+      val fs = dirPath.getFileSystem(hconf.value)
+      // Qualified, so executors resolve the same location as the driver.
+      val target = fs.makeQualified(dirPath)
+      val staging = new Path(target, "_temporary").toString
+      val ext = if (gzip) ".log.gz" else ".log"
+      fs.delete(target, true)
+      try {
+        val staged = lines
+          .mapPartitionsWithIndex { (p, rows) =>
+            val all = rows.toArray
+            val k0 = (starts(p) / batchSize).toInt
+            val head = (batchSize - starts(p) % batchSize).toInt // rows left in chunk k0
+            (Iterator(all.take(head)) ++ all.drop(head).grouped(batchSize))
+              .filter(_.nonEmpty).zipWithIndex
+              .map { case (chunk, j) => (k0 + j, (p, member(chunk, gzip))) }
+          }
+          .partitionBy(new Partitioner {
+            override def numPartitions: Int = files
+            override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+          })
+          .mapPartitionsWithIndex { (k, blocks) =>
+            val path = new Path(staging,
+              f"part-$k%05d-${TaskContext.get.taskAttemptId}$ext")
+            val out = path.getFileSystem(hconf.value).create(path, true)
+            try blocks.map(_._2).toArray.sortBy(_._1).foreach(m => out.write(m._2))
+            finally out.close()
+            Iterator.single(k -> path.toString)
+          }
+          .collect()
+        staged.foreach { case (k, src) =>
+          val dst = new Path(target, f"part-$k%05d$ext")
+          if (!fs.rename(new Path(src), dst))
+            throw new IOException(s"NdjsonSink: rename of $src to $dst failed")
         }
-      }
-      files
-    } finally strs.unpersist(blocking = false)
+        fs.create(new Path(target, "_SUCCESS"), true).close()
+        files
+      } finally fs.delete(new Path(staging), true)
+    } finally lines.unpersist(blocking = false)
+  }
+
+  /** The newline-terminated `lines`, gzip-compressed when `gzip`. */
+  private def member(lines: Array[Array[Byte]], gzip: Boolean): Array[Byte] = {
+    val buf = new ByteArrayOutputStream(1 << 16)
+    val out = new BufferedOutputStream(
+      if (gzip) new GZIPOutputStream(buf, 1 << 16) else buf, 1 << 16)
+    lines.foreach { l => out.write(l); out.write('\n') }
+    out.close()
+    buf.toByteArray
   }
 }

@@ -5,7 +5,6 @@ import java.util.zip.GZIPOutputStream
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -13,6 +12,8 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.SerializableHadoopConf
 
 /** DataSourceV2 BATCH WRITE connector for gzip NDJSON — the engine-native
   * twin of the reference's S3 flusher (io/flush_s3.go:45-84: gzip NDJSON
@@ -47,24 +48,6 @@ class NdjsonWriteSource extends TableProvider {
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
     new NdjsonTable(properties.get("path"))
-}
-
-/** Java-serializable Hadoop Configuration carrier (Spark's own
-  * SerializableConfiguration is private[spark]): the session's resolved
-  * Hadoop conf is captured ONCE on the driver at write-build time and
-  * rides inside the writer factories to executors — so spark.hadoop.*,
-  * s3a credentials/endpoints, and a custom defaultFS all reach every
-  * getFileSystem call on both sides, exactly as Spark's built-in file
-  * writers propagate it. `new Configuration()` here would silently
-  * drop all of those (fine on local FS, wrong everywhere else). */
-private[ndjson] class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit =
-    value.write(out)
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    value = new Configuration(false)
-    value.readFields(in)
-  }
 }
 
 private[ndjson] class NdjsonTable(path: String) extends Table with SupportsWrite {
@@ -190,13 +173,12 @@ private[ndjson] class NdjsonWriterFactory(path: String, tag: String,
   * regardless of partition sizes. */
 private[ndjson] class NdjsonDataWriter(path: String, tag: String,
     partitionId: Int, taskId: Long, failOnContains: String,
-    maxRecordsPerFile: Long = 0L,
-    hconf: SerializableHadoopConf = null) extends DataWriter[InternalRow] {
+    maxRecordsPerFile: Long, hconf: SerializableHadoopConf)
+    extends DataWriter[InternalRow] {
 
   private def chunkPath(k: Int) = new Path(path,
     f"_temporary/$tag/part-$partitionId%05d-tid$taskId-c$k%03d.log.gz")
-  private val fs = chunkPath(0).getFileSystem(
-    if (hconf != null) hconf.value else new Configuration())
+  private val fs = chunkPath(0).getFileSystem(hconf.value)
   private var chunk = 0
   private var temp = chunkPath(0)
   private var out = new GZIPOutputStream(fs.create(temp, true))

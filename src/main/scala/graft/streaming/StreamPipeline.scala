@@ -4,6 +4,7 @@ import graft.k8s._
 import graft.sinks.NdjsonSink
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Streaming assembly of the k8stream dataflow (SURVEY.md §3.1 Spark
@@ -36,7 +37,12 @@ object StreamPipeline {
     * edge. The reference routes event deletes through the same onEvent
     * handler with the same TTL'd cache (handler.go:56-64, 142-151), so
     * the duplicate window is shared behavior, not a divergence; widen
-    * `watermarkDelay` past the cluster's event TTL to close it. */
+    * `watermarkDelay` past the cluster's event TTL to close it.
+    *
+    * [[run]] runs no no-data batches, so keys past the horizon leave
+    * state with the next data batch. A duplicate with the evicted key's
+    * `creationTimestamp` (every K8s re-delivery) is behind the watermark
+    * by then and dropped as late: the same output as an eager eviction. */
   def dedupStream(events: DataFrame, watermarkDelay: String = "1 hour"): DataFrame =
     events
       .withWatermark("creationTimestamp", watermarkDelay)
@@ -178,14 +184,21 @@ object StreamPipeline {
     * `conf.dedupTtlSec` (the reference's 3600 s objectCacheExpiry,
     * flush.go:57-62) and the trigger interval is `conf.batchIntervalSec`
     * (the count-or-time window's time half, io/batch.go:15-37).
-    * `triggerMs` overrides the trigger for tests only. */
+    * `triggerMs` overrides the trigger for tests only.
+    *
+    * No-data batches are off for this query: its one stateful operator
+    * emits on arrival, so such a batch would land nothing, only evict
+    * expired keys (the next data batch does that, [[dedupStream]]), after
+    * re-planning the sink body and re-broadcasting both dimensions. The
+    * setting is read from the session clone taken at `start()`, so it
+    * is set for that call only; later queries keep the session's value. */
   def run(stream: DataFrame, objects: DataFrame, nodes: DataFrame,
       conf: GraftConfig, checkpoint: String,
       triggerMs: Option[Long] = None): StreamingQuery = {
     val filtered = EventPipeline.eligible(stream, conf)
     val deduped = dedupStream(filtered, s"${conf.dedupTtlSec} seconds")
     val trigger = triggerMs.getOrElse(conf.batchIntervalSec * 1000L)
-    deduped.writeStream
+    val writer = deduped.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(trigger))
@@ -194,7 +207,12 @@ object StreamPipeline {
         land(EventPipeline.projectL9(
           EventPipeline.enrich(batch, objects, nodes)).toDF(), conf, batchId)
       }
-      .start()
+    val session = stream.sparkSession.conf
+    val key = SQLConf.STREAMING_NO_DATA_MICRO_BATCHES_ENABLED.key
+    val prev = session.getOption(key)
+    session.set(key, "false")
+    try writer.start()
+    finally prev.fold(session.unset(key))(session.set(key, _))
   }
 
   /** The reference's process entry (`k8stream --config file.json`,

@@ -18,6 +18,29 @@ class NdjsonSinkSpec extends SparkSpec {
       .filter(_ > 0)
   }
 
+  private def gunzipLines(f: java.io.File): Seq[String] = {
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      new java.util.zip.GZIPInputStream(new java.io.FileInputStream(f)), "UTF-8"))
+    try Iterator.continually(in.readLine()).takeWhile(_ != null).toList
+    finally in.close()
+  }
+
+  /** Jobs that `f` starts, counted by a SparkListener. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBusFlush.drain(spark.sparkContext, 30000L)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.graft.ListenerBusFlush.drain(spark.sparkContext, 30000L)
+      (r, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("count cap: 14 records at batchSize 5 → files of {5,5,4}") {
     val tmp = Files.createTempDirectory("ndjson").toString
     val df = (1 to 14).map(i => (i.toLong, s"rec-$i")).toDF("id", "payload")
@@ -49,14 +72,42 @@ class NdjsonSinkSpec extends SparkSpec {
     assert(spark.read.json(s"$tmp/u3_1").count() == 6)
   }
 
+
+  test("exact cap over unaligned partitions: ceil(n/bs) multi-member gzip " +
+    "files, each ≤ bs, every line once, in 2 jobs") {
+    val tmp = Files.createTempDirectory("ndjson").toString
+    // 23 rows over 4 partitions of 7, 1, 5 and 10 rows: no partition
+    // boundary falls on a multiple of 4, so chunks span partitions.
+    val df = spark.sparkContext
+      .parallelize(Seq(0 -> 7, 7 -> 1, 8 -> 5, 13 -> 10), 4)
+      .flatMap { case (from, n) => (from until from + n).map(i => (i.toLong, s"r-$i")) }
+      .toDF("id", "payload")
+    assert(df.rdd.getNumPartitions == 4)
+    val (files, jobs) = jobsOf(NdjsonSink.write(df, tmp, "u6", 4L, batchSize = 4, gzip = true))
+    assert(files == 6)
+    assert(jobs == 2, s"jobs per write: $jobs")
+    val d = new java.io.File(s"$tmp/u6_4")
+    val parts = d.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    assert(parts.map(_.getName).toSeq == (0 until 6).map(k => f"part-$k%05d.log.gz"))
+    assert(!d.listFiles().exists(_.getName == "_temporary"), "staging left behind")
+    // File k holds global indexes [4k, 4k + 4): the exact routing, read
+    // through GZIPInputStream across the members of each file.
+    val id = "\"id\":(\\d+)".r.unanchored
+    def ids(lines: Seq[String]) = lines.map { case id(i) => i.toInt }
+    assert(parts.toSeq.map(f => ids(gunzipLines(f))) == (0 until 23).grouped(4).toSeq)
+    // Hadoop's codec (spark.read.text) reads the same files whole.
+    assert(ids(spark.read.text(d.getPath).as[String].collect().toSeq).sorted == (0 until 23))
+  }
+
   test("empty batch writes nothing") {
     val tmp = Files.createTempDirectory("ndjson").toString
-    val df = Seq.empty[(Long, String)].toDF("id", "payload")
-    assert(NdjsonSink.write(df, tmp, "u4", 2L, batchSize = 5) == 0)
+    val df = Seq.empty[(Long, String)].toDF("id", "payload").repartition(4)
+    // One job: the row count; no write job runs.
+    assert(jobsOf(NdjsonSink.write(df, tmp, "u4", 2L, batchSize = 5)) == (0, 1))
     assert(!Files.exists(Paths.get(s"$tmp/u4_2")))
   }
 
-  test("a failed .txt→.log rename fails the write, naming the path") {
+  test("a failed publish rename fails the write, naming the path") {
     val tmp = Files.createTempDirectory("ndjson").toString
     val df = Seq((1L, "a")).toDF("id", "payload")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -66,13 +117,14 @@ class NdjsonSinkSpec extends SparkSpec {
         NdjsonSink.write(df, s"norename://$tmp", "u5", 3L, batchSize = 5)
       }
       assert(e.getMessage.contains(s"$tmp/u5_3/part-"), e.getMessage)
+      assert(!Files.exists(Paths.get(s"$tmp/u5_3/_temporary")), "staging left behind")
     } finally conf.unset("fs.norename.impl")
   }
 }
 
 /** Local FS under its own scheme whose rename to a `.log` name reports
-  * failure (returns false, as object stores may); the commit protocol's
-  * own renames go through untouched. */
+  * failure (returns false, as object stores may). Reaching it on the
+  * executors also needs the session's Hadoop conf there. */
 class NoLogRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("norename:///")
   override def rename(src: org.apache.hadoop.fs.Path,

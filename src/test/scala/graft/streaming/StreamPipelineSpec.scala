@@ -177,6 +177,51 @@ class StreamPipelineSpec extends SparkSpec {
     assert(parts.length == 2, parts.mkString(","))
   }
 
+  test("event query runs no no-data batches: expired keys leave state " +
+    "with the next data batch, every id lands once, the session keeps its setting") {
+    val tmp = java.nio.file.Files.createTempDirectory("nodata").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("ckptn").toString
+    val in = MemoryStream[KubeEvent]
+    val conf = GraftConfig(uid = "nd", batchSize = 2, fileSinkDir = tmp, gzip = true,
+      dedupTtlSec = 60)
+    def ev(uid: String, at: String) = KubeEvent(uid, ts(s"2024-01-01 $at"),
+      uid, "default", "Scheduled", s"m-$uid", "Normal", Some(1),
+      ObjectRef("v1", "Pod", "w", "default", "1", "o1"), EventSource("kubelet", "n1"))
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val before = spark.conf.getOption(key)
+    val q = StreamPipeline.run(in.toDF(), Seq.empty[KubeObject].toDF(),
+      Seq.empty[KubeNode].toDF(), conf, ckpt, triggerMs = Some(100))
+    assert(spark.conf.getOption(key) == before)
+    try {
+      in.addData(ev("a", "10:00:00"), ev("b", "10:00:00"), ev("c", "10:00:00"))
+      q.processAllAvailable()
+      in.addData(ev("d", "10:10:00")) // moves the watermark past a, b, c
+      q.processAllAvailable()
+      in.addData(ev("e", "10:10:01"), ev("a", "10:00:00")) // a: same-timestamp re-delivery
+      q.processAllAvailable()
+    } finally q.stop()
+    val ran = q.recentProgress.filter(_.durationMs.containsKey("addBatch")).toSeq
+    assert(ran.map(_.numInputRows) == Seq(3L, 1L, 2L), ran.map(_.numInputRows))
+    // a, b and c expire at 10:01; the third batch's watermark is 10:09.
+    assert(ran.map(_.stateOperators.map(_.numRowsTotal).sum) == Seq(3L, 4L, 2L))
+    val ids = spark.read.json(s"$tmp/nd_*").select("id").as[String].collect().sorted
+    assert(ids.toSeq == Seq("a", "b", "c", "d", "e"))
+
+    // A windowed append query started later in the same session still
+    // runs the no-data batch that closes its window.
+    val win = MemoryStream[(Long, Timestamp)]
+    val wq = win.toDF().toDF("k", "t").withWatermark("t", "1 minute")
+      .groupBy(window(col("t"), "5 minutes")).count()
+      .writeStream.format("memory").queryName("ndwin").outputMode(OutputMode.Append).start()
+    try {
+      win.addData((1L, ts("2024-01-01 10:00:00")))
+      wq.processAllAvailable()
+      win.addData((1L, ts("2024-01-01 10:30:00")))
+      wq.processAllAvailable()
+      assert(spark.table("ndwin").count() == 1, "closing window not emitted")
+    } finally wq.stop()
+  }
+
   test("service-side pipeline (runServices): versioned gate tags " +
     "added/updated lifecycle, P4 projection lands L9 service events") {
     val ckpt = java.nio.file.Files.createTempDirectory("ckpts").toString
