@@ -74,16 +74,41 @@ object EventPipeline {
 
   // --------------------------------------------------------- enrichment
 
+  /** E1 dimension: `objects` projected to `(uid, labels, annotations,
+    * pod)`, where `pod` is the P2/P3 mini pod map built once per object
+    * (reference event.go:80-111). A Pod's JSON doc decodes once into a
+    * struct column, which the map then reads (P3); the map keeps the six
+    * mini-pod fields (P2). A non-Pod, or a Pod whose doc does not decode,
+    * gets an empty map. A malformed doc decodes to a struct of nulls, not
+    * to null, so the decode marks it in a corrupt-record field. */
+  def objectDim(objects: DataFrame): DataFrame =
+    objects
+      .select(col("uid"), col("labels"), col("annotations"), col("kind"),
+        from_json(col("pod_json"), podSchema,
+          Map("columnNameOfCorruptRecord" -> "__corrupt")).as("__pod"))
+      .select(col("uid"), col("labels"), col("annotations"),
+        when(col("kind") === "Pod" && col("__pod").isNotNull &&
+          col("__pod.__corrupt").isNull, map(lit("info"), miniPodJson("__pod")))
+          .otherwise(map()).as("pod"))
+
+  /** E2 dimension: `nodes` projected to `(name, addresses)`. */
+  def nodeDim(nodes: DataFrame): DataFrame =
+    nodes.select(col("name"), col("addresses"))
+
   /** E1+E2: dimension lookup joins — event → involved object (labels /
-    * annotations / pod doc) and host → node addresses. Left joins: a miss
+    * annotations / pod map) and host → node addresses. Left joins: a miss
     * enriches with nulls, it never drops the record (reference
     * k8sclient.go:124-159, 95-122; empty host short-circuits to []). */
-  def enrich(events: DataFrame, objects: DataFrame, nodes: DataFrame): DataFrame = {
-    val obj = objects.select(
+  def enrich(events: DataFrame, objects: DataFrame, nodes: DataFrame): DataFrame =
+    enrichDims(events, objectDim(objects), nodeDim(nodes))
+
+  /** [[enrich]] over dimensions already projected by [[objectDim]] and
+    * [[nodeDim]], so a caller can build (and cache) them once. */
+  def enrichDims(events: DataFrame, objDim: DataFrame, nodeDim: DataFrame): DataFrame = {
+    val obj = objDim.select(
       col("uid").as("__obj_uid"), col("labels").as("__obj_labels"),
-      col("annotations").as("__obj_annotations"), col("kind").as("__obj_kind"),
-      col("pod_json").as("__obj_pod_json"))
-    val nd = nodes.select(col("name").as("__node_name"),
+      col("annotations").as("__obj_annotations"), col("pod").as("__obj_pod"))
+    val nd = nodeDim.select(col("name").as("__node_name"),
       col("addresses").as("__node_addresses"))
     events
       .join(broadcast(obj), col("involvedObject.uid") === col("__obj_uid"), "left_outer")
@@ -103,18 +128,16 @@ object EventPipeline {
       col(s"$prefix.ip").as("ip"),
       col(s"$prefix.host_ip").as("host_ip")))
 
-  private val podSchema =
-    "uid STRING, name STRING, namespace STRING, start_time TIMESTAMP, ip STRING, host_ip STRING"
+  private val podSchema = "uid STRING, name STRING, namespace STRING, " +
+    "start_time TIMESTAMP, ip STRING, host_ip STRING, __corrupt STRING"
 
-  /** P1+P2+P3: project an enriched event to the flat L9Event record
-    * (reference event.go:49-77). The `pod` column is populated only when
-    * the involved object is a Pod — decoded from the object's JSON doc
-    * (P3, event.go:100-111) and pruned to the mini map (P2). */
+  /** P1: project an enriched event to the flat L9Event record (reference
+    * event.go:49-77). The `pod` column is the object's mini pod map from
+    * [[objectDim]], empty on a miss. */
   def projectL9(enriched: DataFrame): Dataset[L9Event] = {
     val spark = enriched.sparkSession
     import spark.implicits._
     enriched
-      .withColumn("__pod", from_json(col("__obj_pod_json"), lit(podSchema)))
       .select(
         col("uid").as("id"),
         unix_timestamp(col("creationTimestamp")).as("timestamp"),
@@ -132,9 +155,7 @@ object EventPipeline {
         coalesce(col("__obj_labels"), map()).as("labels"),
         coalesce(col("__obj_annotations"), map()).as("annotations"),
         coalesce(col("__node_addresses"), array()).cast("array<string>").as("address"),
-        when(col("__obj_kind") === "Pod" && col("__pod").isNotNull,
-          map(lit("info"), miniPodJson("__pod")))
-          .otherwise(map()).as("pod"),
+        coalesce(col("__obj_pod"), map()).as("pod"),
         lit(L9Event.Version).as("version"))
       .as[L9Event]
   }

@@ -7,7 +7,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.{Partitioner, TaskContext}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Batch-windowed NDJSON sink — the W1/W2/K1/K2 tail of the reference
   * pipeline (SURVEY.md §2.1).
@@ -31,12 +30,19 @@ object NdjsonSink {
     * NDJSON files in two Spark jobs (one for an empty input). Returns
     * the number of files written.
     *
-    *  - Job 1 persists the serialized lines and collects per-partition
-    *    row counts, which give each partition's global offset. A plain
-    *    round-robin `repartition(files)` does NOT guarantee the cap
-    *    (caught by the batch-partitioning property test). The lines are
-    *    pinned so job 2 sees the rows job 1 counted, even for a
-    *    non-deterministic input.
+    *  - Job 1 pins the serialized lines with `localCheckpoint` and
+    *    counts each partition's rows, which give each partition's global
+    *    offset. A plain round-robin `repartition(files)` does NOT
+    *    guarantee the cap (caught by the batch-partitioning property
+    *    test). The count's function captures nothing, so the job ships
+    *    the input's plan once.
+    *  - After job 1 the pinned lines drop their lineage: job 2 reads the
+    *    blocks job 1 stored and ships no plan, and it sees exactly the
+    *    rows job 1 counted, even for a non-deterministic input. The
+    *    trade-off is block loss: a lost block fails the write instead of
+    *    being recomputed (perhaps with other rows). The micro-batch then
+    *    does not commit, and a restart re-runs it under the same batch id,
+    *    which overwrites `<uid>_<batchId>` (the replay law above).
     *  - Job 2: each partition packs the rows of every chunk it overlaps
     *    into one member (gzip or plain), so compression runs on every
     *    partition; the members shuffle to `files` writers, and writer k
@@ -49,9 +55,10 @@ object NdjsonSink {
       batchSize: Int, gzip: Boolean = false): Int = {
     val lines = batch.select(to_json(struct(batch.columns.map(col): _*)))
       .queryExecution.toRdd.map(_.getUTF8String(0).copy().getBytes)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     try {
-      val counts = lines.mapPartitions(it => Iterator.single(it.size.toLong)).collect()
+      val counts = batch.sparkSession.sparkContext
+        .runJob(lines, (it: Iterator[Array[Byte]]) => it.size.toLong)
       val starts = counts.scanLeft(0L)(_ + _)
       val n = starts.last
       if (n == 0) return 0

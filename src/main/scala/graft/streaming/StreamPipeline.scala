@@ -5,7 +5,9 @@ import graft.sinks.NdjsonSink
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
+  StreamingQueryListener, Trigger}
+import org.apache.spark.storage.StorageLevel
 
 /** Streaming assembly of the k8stream dataflow (SURVEY.md §3.1 Spark
   * shape): source → eligibility filters → watermarked dedup →
@@ -177,8 +179,17 @@ object StreamPipeline {
   }
 
   /** The full event-side streaming query: returns the started query.
-    * `objects`/`nodes` are static dimensions re-read per micro-batch
-    * (stream-static join = the TTL'd lookup cache, SURVEY.md §2.1 E1/E2).
+    *
+    * `objects`/`nodes` are a per-query snapshot (SURVEY.md §2.1 E1/E2,
+    * the reference's lookup cache): projected once by
+    * [[EventPipeline.objectDim]]/[[EventPipeline.nodeDim]], persisted and
+    * materialized before `start()`, and released when the query
+    * terminates. Every micro-batch joins that snapshot, so a dimension
+    * change reaches the query only through a restart. The cache keeps its
+    * lineage: a lost block is recomputed from `objects`/`nodes`. Two
+    * queries started over the same dimensions share one cache entry, and
+    * the first to terminate releases it (the other then re-reads them
+    * per batch).
     *
     * Config twins honored here: the dedup horizon is
     * `conf.dedupTtlSec` (the reference's 3600 s objectCacheExpiry,
@@ -197,22 +208,56 @@ object StreamPipeline {
       triggerMs: Option[Long] = None): StreamingQuery = {
     val filtered = EventPipeline.eligible(stream, conf)
     val deduped = dedupStream(filtered, s"${conf.dedupTtlSec} seconds")
+    val objDim = EventPipeline.objectDim(objects).persist(StorageLevel.MEMORY_AND_DISK)
+    val nodeDim = EventPipeline.nodeDim(nodes).persist(StorageLevel.MEMORY_AND_DISK)
+    val dims = Seq(objDim, nodeDim)
     val trigger = triggerMs.getOrElse(conf.batchIntervalSec * 1000L)
     val writer = deduped.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(trigger))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // E1/E2/P1-P3 run inside the batch (dimensions current per batch).
+        // E1/E2/P1-P3 run inside the batch, against the query's dimension snapshot.
         land(EventPipeline.projectL9(
-          EventPipeline.enrich(batch, objects, nodes)).toDF(), conf, batchId)
+          EventPipeline.enrichDims(batch, objDim, nodeDim)).toDF(), conf, batchId)
       }
     val session = stream.sparkSession.conf
     val key = SQLConf.STREAMING_NO_DATA_MICRO_BATCHES_ENABLED.key
     val prev = session.getOption(key)
-    session.set(key, "false")
-    try writer.start()
-    finally prev.fold(session.unset(key))(session.set(key, _))
+    val query =
+      try {
+        dims.foreach(_.count())
+        session.set(key, "false")
+        try writer.start()
+        finally prev.fold(session.unset(key))(session.set(key, _))
+      } catch {
+        case e: Throwable =>
+          dims.foreach(_.unpersist(blocking = false))
+          throw e
+      }
+    releaseOnTermination(stream.sparkSession, query, dims)
+    query
+  }
+
+  /** Unpersist `cached` once `query` terminates (stopped or failed). The
+    * terminated event arrives on the listener bus after `stop()` returns;
+    * a query that already ended before the listener was added releases
+    * here. */
+  private def releaseOnTermination(spark: SparkSession, query: StreamingQuery,
+      cached: Seq[DataFrame]): Unit = {
+    val streams = spark.streams
+    def release(listener: StreamingQueryListener): Unit = {
+      streams.removeListener(listener)
+      cached.foreach(_.unpersist(blocking = false))
+    }
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.id == query.id) release(this)
+    }
+    streams.addListener(listener)
+    if (!query.isActive) release(listener)
   }
 
   /** The reference's process entry (`k8stream --config file.json`,

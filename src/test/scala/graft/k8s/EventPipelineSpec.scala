@@ -33,8 +33,9 @@ class EventPipelineSpec extends SparkSpec {
 
   private val nodes = Seq(KubeNode("node-1", Seq("192.168.0.2", "10.0.0.1")))
 
-  private def run(conf: GraftConfig = GraftConfig(uid = "t")) =
-    EventPipeline.events(events.toDF(), objects.toDF(), nodes.toDF(), conf)
+  private def run(conf: GraftConfig = GraftConfig(uid = "t"),
+      evs: Seq[KubeEvent] = events, objs: Seq[KubeObject] = objects) =
+    EventPipeline.events(evs.toDF(), objs.toDF(), nodes.toDF(), conf)
       .collect().map(e => e.id -> e).toMap
 
   test("F2 static namespace blacklist drops kube-system; D1 dedups by uid") {
@@ -70,6 +71,18 @@ class EventPipelineSpec extends SparkSpec {
     val e4 = run()("e4")
     assert(e4.labels == Map("app" -> "api"))
     assert(e4.pod.isEmpty)
+    // A Pod whose doc does not decode, and a non-Pod that carries a pod
+    // doc: labels enriched, pod map empty.
+    val odd = run(
+      evs = events ++ Seq(ev("e6", "default", "Failed", "Pod", "pod-bad"),
+        ev("e7", "prod", "Scaled", "ReplicaSet", "rs-1")),
+      objs = objects ++ Seq(
+        KubeObject("pod-bad", "Pod", "default", "bad", Map("app" -> "bad"), Map(),
+          "{not json"),
+        KubeObject("rs-1", "ReplicaSet", "prod", "rs", Map("app" -> "rs"), Map(),
+          objects.head.pod_json)))
+    assert(odd("e6").labels == Map("app" -> "bad") && odd("e6").pod.isEmpty, odd("e6").pod)
+    assert(odd("e7").labels == Map("app" -> "rs") && odd("e7").pod.isEmpty, odd("e7").pod)
   }
 
   test("E2 node-address join; empty host and misses yield empty array") {

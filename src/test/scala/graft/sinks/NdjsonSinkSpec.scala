@@ -83,9 +83,11 @@ class NdjsonSinkSpec extends SparkSpec {
       .flatMap { case (from, n) => (from until from + n).map(i => (i.toLong, s"r-$i")) }
       .toDF("id", "payload")
     assert(df.rdd.getNumPartitions == 4)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val (files, jobs) = jobsOf(NdjsonSink.write(df, tmp, "u6", 4L, batchSize = 4, gzip = true))
     assert(files == 6)
     assert(jobs == 2, s"jobs per write: $jobs")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted, "pinned lines left behind")
     val d = new java.io.File(s"$tmp/u6_4")
     val parts = d.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
     assert(parts.map(_.getName).toSeq == (0 until 6).map(k => f"part-$k%05d.log.gz"))
@@ -102,8 +104,10 @@ class NdjsonSinkSpec extends SparkSpec {
   test("empty batch writes nothing") {
     val tmp = Files.createTempDirectory("ndjson").toString
     val df = Seq.empty[(Long, String)].toDF("id", "payload").repartition(4)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     // One job: the row count; no write job runs.
     assert(jobsOf(NdjsonSink.write(df, tmp, "u4", 2L, batchSize = 5)) == (0, 1))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted, "pinned lines left behind")
     assert(!Files.exists(Paths.get(s"$tmp/u4_2")))
   }
 

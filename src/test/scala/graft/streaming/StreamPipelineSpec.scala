@@ -139,6 +139,50 @@ class StreamPipelineSpec extends SparkSpec {
       s"expected part-*.log files, got ${names.mkString(",")}")
   }
 
+  test("event query builds its dimensions once: over three micro-batches " +
+    "the objects source runs once, the records equal the batch form, and " +
+    "stop() leaves no cached dimension") {
+    val ckpt = java.nio.file.Files.createTempDirectory("ckptd").toString
+    val in = MemoryStream[KubeEvent]
+    val objRows = Seq(
+      KubeObject("o1", "Pod", "default", "w", Map("app" -> "w"), Map("team" -> "core"),
+        """{"uid":"o1","name":"w","namespace":"default","start_time":"2024-01-01T09:00:00","ip":"1.2.3.4","host_ip":"5.6.7.8"}"""),
+      KubeObject("o2", "Deployment", "default", "d", Map("app" -> "d"), Map(), null))
+    val reads = spark.sparkContext.longAccumulator("objectRowsRead")
+    val objects = spark.sparkContext.parallelize(objRows, 1)
+      .map { o => reads.add(1); o }.toDF()
+    val nodes = Seq(KubeNode("n1", Seq("5.6.7.8"))).toDF()
+    val conf = GraftConfig(uid = "dims", sink = "memory", batchSize = 10)
+    graft.sinks.MemoryBatchSink.clear("dims")
+    def ev(uid: String, obj: String, host: String) = KubeEvent(uid,
+      ts("2024-01-01 10:00:00"), uid, "default", "Scheduled", s"m-$uid", "Normal",
+      Some(1), ObjectRef("v1", "Pod", "w", "default", "1", obj), EventSource("kubelet", host))
+    val batches = Seq(
+      Seq(ev("a", "o1", "n1"), ev("b", "o2", "n1")),
+      Seq(ev("c", "o1", ""), ev("d", "missing", "n1")),
+      Seq(ev("e", "o2", "n2"), ev("f", "o1", "n1")))
+    def flush(): Unit = org.apache.spark.graft.ListenerBusFlush.drain(spark.sparkContext, 30000L)
+    flush()
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val q = StreamPipeline.run(in.toDF(), objects, nodes, conf, ckpt, triggerMs = Some(100))
+    try {
+      assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore.size + 2)
+      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+    } finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+    assert(reads.value == objRows.size, s"objects source rows read: ${reads.value}")
+    flush()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore,
+      "a dimension is still cached after stop()")
+    val landed = graft.sinks.MemoryBatchSink.batches("dims").flatMap(_._2).flatten.sorted
+    val l9 = EventPipeline.events(batches.flatten.toDF(), objRows.toDF(), nodes,
+      conf).toDF()
+    val expected = l9.select(to_json(struct(l9.columns.map(col): _*)))
+      .as[String].collect().sorted.toSeq
+    assert(landed == expected)
+    assert(landed.count(_.contains("\"info\"")) == 3) // a, c and f carry o1's pod map
+  }
+
   test("replay law: an uncommitted micro-batch re-run under the same " +
     "batch id overwrites its own files, so every record lands once") {
     val tmp = java.nio.file.Files.createTempDirectory("replay").toString
