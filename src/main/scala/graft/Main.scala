@@ -14,7 +14,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     [--objects objects.parquet] [--nodes nodes.parquet] \
   *     [--checkpoint dir]   (default: <file_sink_dir>/_checkpoints/<uid>)
   *   runMain graft.Main --config cfg.json --endpoint https://apiserver \
-  *     [--token t] [--namespace ns] ...
+  *     [--token t] [--namespace ns] ...   (relists every resync_interval,
+  *                                          as the config-only live path does)
   *
   * Dimensions default to EMPTY relations when not provided — enrichment
   * left-joins then pass every event through with null enrichment, the
@@ -44,15 +45,14 @@ object Main {
     if (!opts.contains("watch") && !opts.contains("endpoint"))
       return graft.streaming.StreamPipeline.runLive(
         configPath, spark, objects, nodes, checkpoint)
-    val reader = spark.readStream
-      .format("graft.sources.k8s.K8sEventSource")
-    val src = opts.get("watch").map(w => reader.option("path", w))
-      .getOrElse {
-        val r = reader.option("endpoint", opts("endpoint"))
-        val r2 = opts.get("token").map(r.option("token", _)).getOrElse(r)
-        opts.get("namespace").map(r2.option("namespace", _)).getOrElse(r2)
-      }
-      .load()
+    val src = opts.get("watch") match {
+      case Some(w) => spark.readStream
+        .format("graft.sources.k8s.K8sEventSource").option("path", w).load()
+      case None => graft.streaming.StreamPipeline.liveReader(spark,
+        "K8sEventSource", graft.sources.k8s.Kubeconfig.KubeContext(
+          opts("endpoint"), opts.get("token"), opts.get("namespace")),
+        graft.k8s.GraftConfig.load(configPath)).load()
+    }
     graft.streaming.StreamPipeline.runFromConfig(
       configPath, src, objects, nodes, checkpoint)
   }

@@ -8,9 +8,11 @@ import scala.jdk.CollectionConverters._
 
 /** Live Kubernetes watch client over the public watch API — the HTTP
   * analog of the reference's informer machinery (main.go:88-90 starts
-  * informers; k8sclient.go:37-60 builds the clientset). Same contract as
-  * [[FileWatchClient]]: two calls, `latestRv` and `fetch`, both served
-  * from a driver-side buffer.
+  * informers; k8sclient.go:37-60 builds the clientset). Its contract
+  * with [[K8sWatchStream]] is four calls, all on a driver-side buffer:
+  * `latestRv` (the offset cursor), `rvAfter` (the admission-control
+  * cursor), `fetch` (an rv range) and `trimCommitted` (drop what the
+  * stream has committed).
   *
   * Protocol (public Kubernetes API semantics):
   *  1. LIST  `GET {base}{apiPrefix}/{resource}` — seeds the buffer and
@@ -46,10 +48,10 @@ import scala.jdk.CollectionConverters._
   *
   * Liveness: a half-open connection (NAT drop) would block `readLine()`
   * forever with no exception — so the watch request carries the public
-  * `timeoutSeconds` parameter (`serverTimeoutSec`, the server's bound on
+  * `timeoutSeconds` parameter (`ServerTimeoutSec`, the server's bound on
   * the WHOLE watch — deliberately long, it is not an idle timeout) AND a
   * local watchdog closes the response stream if no line arrives within
-  * `idleTimeoutMs`, which lands the reader in the resync loop — as a
+  * `IdleTimeoutMs`, which lands the reader in the resync loop — as a
   * CLEAN end (flagged before the close): the rv cursor is still valid,
   * so an idle-close re-WATCHes from `maxSeenRv` rather than re-LISTing
   * the collection every idle period. Either side alone is insufficient:
@@ -57,13 +59,13 @@ import scala.jdk.CollectionConverters._
   * that case. The LIST half (and every
   * exchange up to response headers — safe for the streaming WATCH,
   * whose timer is cancelled once headers arrive) is covered by
-  * `requestTimeoutMs` on the request itself, so a half-open connection
+  * `RequestTimeoutMs` on the request itself, so a half-open connection
   * during LIST cannot block `http.send` forever either.
   *
   * Backpressure, not eviction: the buffer is a rv-ordered skip-list
   * trimmed only BELOW the committed rv (`trimCommitted`, called from the
   * MicroBatchStream's `commit`). When uncommitted backlog reaches
-  * `bufferCap` the read loop PAUSES (the reference's bounded-channel
+  * `BufferCap` the read loop PAUSES (the reference's bounded-channel
   * semantic, flush.go:20) instead of evicting — `planInputPartitions`
   * can therefore always re-plan an uncommitted range without a hole.
   *
@@ -76,14 +78,12 @@ import scala.jdk.CollectionConverters._
   * (events, services), `/apis/apps/v1` for deployments — the reference
   * watches both groups (k8sclient.go:62-74 lists apps/v1 Deployments).
   */
-class HttpWatchClient[T](base: String, resourcePath: String,
+class HttpWatchClient[T](base: String, apiPrefix: String,
+    resourcePath: String,
     decode: (String, com.fasterxml.jackson.databind.JsonNode) => Option[(Long, T)],
-    token: Option[String] = None,
-    namespace: Option[String] = None, resyncBackoffMs: Long = 1000L,
-    bufferCap: Int = 1 << 20, idleTimeoutMs: Long = 300000L,
-    apiPrefix: String = "/api/v1", serverTimeoutSec: Long = 3600L,
-    requestTimeoutMs: Long = 30000L,
-    relistIntervalMs: Long = Long.MaxValue) extends AutoCloseable {
+    token: Option[String], namespace: Option[String],
+    resyncBackoffMs: Long, relistIntervalMs: Long) extends AutoCloseable {
+  import HttpWatchClient.{BufferCap, IdleTimeoutMs, RequestTimeoutMs, ServerTimeoutSec}
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private val buffer = new ConcurrentSkipListMap[Long, T]()
@@ -103,7 +103,7 @@ class HttpWatchClient[T](base: String, resourcePath: String,
   // a LOCAL liveness decision, not a lost rv cursor — the read loop must
   // re-WATCH from maxSeenRv, not fall into the full-LIST recovery path
   // (a quiet namespace would otherwise LIST the whole collection every
-  // idleTimeoutMs for nothing).
+  // IdleTimeoutMs for nothing).
   @volatile private var watchdogClosed = false
 
   private val listUrl = namespace match {
@@ -118,7 +118,7 @@ class HttpWatchClient[T](base: String, resourcePath: String,
     val b = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url)).GET()
       // Until response headers only — the streaming WATCH body is NOT
       // bounded by this; it is the LIST-half liveness cover.
-      .timeout(java.time.Duration.ofMillis(requestTimeoutMs))
+      .timeout(java.time.Duration.ofMillis(RequestTimeoutMs))
     token.foreach(t => b.header("Authorization", s"Bearer $t"))
     b.build()
   }
@@ -149,7 +149,7 @@ class HttpWatchClient[T](base: String, resourcePath: String,
     * the client closes. Deliberately NOT an eviction — dropping
     * uncommitted rvs would punch a silent hole in a replanned range. */
   private def awaitSpace(): Unit =
-    while (running.get() && occupancy.get() >= bufferCap) {
+    while (running.get() && occupancy.get() >= BufferCap) {
       lastProgressMs = System.currentTimeMillis() // paused ≠ stalled
       Thread.sleep(20)
     }
@@ -169,7 +169,7 @@ class HttpWatchClient[T](base: String, resourcePath: String,
     // fresh on idle streams (otherwise a quiet namespace's cursor ages
     // toward the compaction horizon and eventually 410s into a LIST).
     val url = s"$listUrl?watch=true&resourceVersion=$fromRv" +
-      s"&timeoutSeconds=$serverTimeoutSec&allowWatchBookmarks=true"
+      s"&timeoutSeconds=$ServerTimeoutSec&allowWatchBookmarks=true"
     val resp = http.send(request(url),
       java.net.http.HttpResponse.BodyHandlers.ofInputStream())
     if (resp.statusCode() == 410) return false // Gone: rv expired -> re-list
@@ -253,17 +253,17 @@ class HttpWatchClient[T](base: String, resourcePath: String,
   loop.setDaemon(true)
   loop.start()
 
-  // Idle watchdog: if the reader has made no progress for idleTimeoutMs,
+  // Idle watchdog: if the reader has made no progress for IdleTimeoutMs,
   // the connection is presumed half-open — close the body so readLine()
   // throws and the loop falls back into LIST+WATCH resync. Single daemon
-  // timer; checks at idleTimeoutMs/4 granularity.
+  // timer; checks at IdleTimeoutMs/4 granularity.
   private val watchdog = new Thread(() => {
     while (running.get()) {
-      try Thread.sleep(math.max(10L, idleTimeoutMs / 4))
+      try Thread.sleep(math.max(10L, IdleTimeoutMs / 4))
       catch { case _: InterruptedException => () }
       val body = activeBody
       if (running.get() && body != null &&
-          System.currentTimeMillis() - lastProgressMs > idleTimeoutMs) {
+          System.currentTimeMillis() - lastProgressMs > IdleTimeoutMs) {
         watchdogClosed = true // flag BEFORE close: the reader sees it set
         try body.close() catch { case _: Exception => () }
       }
@@ -340,25 +340,28 @@ class HttpWatchClient[T](base: String, resourcePath: String,
   * apps/v1 deployments). */
 object HttpWatchClient {
 
+  /** Uncommitted records buffered before the read loop pauses. */
+  private val BufferCap = 1 << 20
+  /** No watch line for this long = a half-open connection. */
+  private val IdleTimeoutMs = 300000L
+  /** The server's bound on one whole watch (`timeoutSeconds`). */
+  private val ServerTimeoutSec = 3600L
+  /** Bound on each exchange up to response headers. */
+  private val RequestTimeoutMs = 30000L
+
   def events(base: String, token: Option[String] = None,
       namespace: Option[String] = None, resyncBackoffMs: Long = 1000L,
-      bufferCap: Int = 1 << 20, idleTimeoutMs: Long = 300000L,
-      relistIntervalMs: Long = Long.MaxValue)
-      : HttpWatchClient[KubeEvent] =
-    new HttpWatchClient[KubeEvent](base, "events",
+      relistIntervalMs: Long = Long.MaxValue): HttpWatchClient[KubeEvent] =
+    new HttpWatchClient[KubeEvent](base, "/api/v1", "events",
       (_, n) => decodeEvent(n), token, namespace, resyncBackoffMs,
-      bufferCap, idleTimeoutMs, relistIntervalMs = relistIntervalMs)
+      relistIntervalMs)
 
   def services(base: String, token: Option[String] = None,
       namespace: Option[String] = None, resyncBackoffMs: Long = 1000L,
-      bufferCap: Int = 1 << 20, idleTimeoutMs: Long = 300000L,
-      relistIntervalMs: Long = Long.MaxValue)
-      : HttpWatchClient[WatchedService] =
-    new HttpWatchClient[WatchedService](base, "services",
-      (t, n) => decodeService(n).map { case (rv, s) =>
-        rv -> WatchedService.of(s, t) },
-      token, namespace, resyncBackoffMs, bufferCap, idleTimeoutMs,
-      relistIntervalMs = relistIntervalMs)
+      relistIntervalMs: Long = Long.MaxValue): HttpWatchClient[WatchedService] =
+    new HttpWatchClient[WatchedService](base, "/api/v1", "services",
+      decodeSelecting(deployment = false), token, namespace, resyncBackoffMs,
+      relistIntervalMs)
 
   /** apps/v1 Deployments as selector-bearing dimension rows (uid,
     * namespace, name, labels, spec.selector.matchLabels) — the E5 feed
@@ -367,14 +370,10 @@ object HttpWatchClient {
     * (uid, namespace, selector). */
   def deployments(base: String, token: Option[String] = None,
       namespace: Option[String] = None, resyncBackoffMs: Long = 1000L,
-      bufferCap: Int = 1 << 20, idleTimeoutMs: Long = 300000L,
-      relistIntervalMs: Long = Long.MaxValue)
-      : HttpWatchClient[WatchedService] =
-    new HttpWatchClient[WatchedService](base, "deployments",
-      (t, n) => decodeDeployment(n).map { case (rv, s) =>
-        rv -> WatchedService.of(s, t) },
-      token, namespace, resyncBackoffMs, bufferCap, idleTimeoutMs,
-      apiPrefix = "/apis/apps/v1", relistIntervalMs = relistIntervalMs)
+      relistIntervalMs: Long = Long.MaxValue): HttpWatchClient[WatchedService] =
+    new HttpWatchClient[WatchedService](base, "/apis/apps/v1", "deployments",
+      decodeSelecting(deployment = true), token, namespace, resyncBackoffMs,
+      relistIntervalMs)
 
   private def strMap(n: com.fasterxml.jackson.databind.JsonNode)
       : Map[String, String] =
@@ -385,51 +384,36 @@ object HttpWatchClient {
       b.result()
     }
 
-  /** v1.Service JSON → KubeService (the S2 consumed subset:
-    * event_service.go / FIXTURES.md §A.3). */
-  private[sources] def decodeService(
-      n: com.fasterxml.jackson.databind.JsonNode)
-      : Option[(Long, KubeService)] = {
-    val meta = n.path("metadata")
-    val uid = meta.path("uid").asText("")
-    val rvText = meta.path("resourceVersion").asText("")
-    val rv = try rvText.toLong catch { case _: NumberFormatException => -1L }
-    if (uid.isEmpty || rv <= 0) return None
-    Some(rv -> KubeService(
-      uid = uid,
-      resource_version = rvText,
-      name = meta.path("name").asText(""),
-      namespace = meta.path("namespace").asText(""),
-      labels = strMap(meta.path("labels")),
-      annotations = strMap(meta.path("annotations")),
-      selector = strMap(n.path("spec").path("selector"))))
-  }
-
-  /** apps/v1.Deployment JSON → KubeService carrier. The deployment's pod
-    * selector lives at spec.selector.matchLabels (a LabelSelector, not
-    * the bare map a Service has). A LabelSelector can ALSO carry
+  /** v1.Service (the S2 consumed subset: event_service.go / FIXTURES.md
+    * §A.3) or apps/v1.Deployment JSON → the KubeService carrier, tagged
+    * with the watch type. A Service's selector is the bare map at
+    * spec.selector; a Deployment's is a LabelSelector, whose map lives at
+    * spec.selector.matchLabels. A LabelSelector can ALSO carry
     * matchExpressions (set-based requirements) — the equi-join form of
     * E3 cannot express those, and decoding such a deployment with only
     * its matchLabels half (or an empty map) would silently join the
     * WRONG pod set; skip the row instead, so a miss is visibly a miss. */
-  private[sources] def decodeDeployment(
+  private def decodeSelecting(deployment: Boolean)(watchType: String,
       n: com.fasterxml.jackson.databind.JsonNode)
-      : Option[(Long, KubeService)] = {
+      : Option[(Long, WatchedService)] = {
     val meta = n.path("metadata")
     val uid = meta.path("uid").asText("")
     val rvText = meta.path("resourceVersion").asText("")
     val rv = try rvText.toLong catch { case _: NumberFormatException => -1L }
-    if (uid.isEmpty || rv <= 0) return None
-    val exprs = n.path("spec").path("selector").path("matchExpressions")
-    if (exprs.isArray && exprs.size > 0) return None
-    Some(rv -> KubeService(
+    val selector = n.path("spec").path("selector")
+    val exprs = selector.path("matchExpressions")
+    if (uid.isEmpty || rv <= 0 ||
+        (deployment && exprs.isArray && exprs.size > 0)) None
+    else Some(rv -> WatchedService.of(KubeService(
       uid = uid,
       resource_version = rvText,
       name = meta.path("name").asText(""),
       namespace = meta.path("namespace").asText(""),
       labels = strMap(meta.path("labels")),
       annotations = strMap(meta.path("annotations")),
-      selector = strMap(n.path("spec").path("selector").path("matchLabels"))))
+      selector = strMap(
+        if (deployment) selector.path("matchLabels") else selector)),
+      watchType))
   }
 
   /** v1.Event JSON → KubeEvent; None when the record is unusable (no

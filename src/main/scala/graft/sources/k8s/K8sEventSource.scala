@@ -5,11 +5,10 @@ import java.sql.Timestamp
 import java.util
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.jdk.CollectionConverters._
@@ -29,11 +28,13 @@ import scala.jdk.CollectionConverters._
   *  - [[FileWatchClient]] (`option("path", file)`) — NDJSON watch-record
   *    replay, offline-testable, the fixture shape;
   *  - [[HttpWatchClient]] (`option("endpoint", "https://apiserver")`,
-  *    optional `token` / `namespace` options) — the LIVE path against
-  *    the Kubernetes LIST+WATCH API (the reference's informer role,
-  *    main.go:88-90). The client buffers on the driver; partitions carry
-  *    their planned slice (the socket/rate-source pattern — correct for
-  *    event volumes, which are control-plane-scale, not data-scale).
+  *    plus the [[WatchOptions]] both k8s sources take) — the LIVE path
+  *    against the Kubernetes LIST+WATCH API (the reference's informer
+  *    role, main.go:88-90), through the [[K8sWatchStream]] the service
+  *    source also uses. The client buffers on the driver; partitions
+  *    carry their planned slice (the socket/rate-source pattern —
+  *    correct for event volumes, which are control-plane-scale, not
+  *    data-scale).
   *
   * Usage: spark.readStream.format("graft.sources.k8s.K8sEventSource")
   *          .option("path", watchFile).load()            // replay
@@ -45,67 +46,26 @@ class K8sEventSource extends TableProvider {
     K8sEventSource.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
+    val o = WatchOptions.parse(properties)
     // Fail at source construction, not with an NPE from Paths.get deep
     // inside the first poll.
-    val path = properties.get("path")
-    val endpoint = properties.get("endpoint")
-    require((path != null && path.nonEmpty) ||
-      (endpoint != null && endpoint.nonEmpty),
+    val path = Option(properties.get("path")).filter(_.nonEmpty)
+    require(path.nonEmpty || o.endpoint.nonEmpty,
       "K8sEventSource requires .option(\"path\", <watch file>) or " +
         ".option(\"endpoint\", <api-server url>)")
-    new K8sEventTable(path, endpoint,
-      Option(properties.get("token")).filter(_.nonEmpty),
-      Option(properties.get("namespace")).filter(_.nonEmpty),
-      Option(properties.get("relistIntervalMs")).filter(_.nonEmpty)
-        .map(_.toLong).getOrElse(Long.MaxValue),
-      // watch reconnect pacing: 1 s default matches the reference
-      // informer's steady backoff; soak/high-churn deployments tune it
-      Option(properties.get("resyncBackoffMs")).filter(_.nonEmpty)
-        .map(_.toLong).getOrElse(1000L),
-      // admission control: cap how many buffered events one micro-batch
-      // may admit (Kafka's maxOffsetsPerTrigger analog). Unset = drain
-      // all available — correct for steady state, but a catch-up batch
-      // after downtime then swallows the whole backlog in one plan.
-      Option(properties.get("maxEventsPerTrigger")).filter(_.nonEmpty)
-        .map(_.toInt))
+    if (o.endpoint.nonEmpty)
+      o.liveTable("events", K8sEventSource.encoder, HttpWatchClient.events)
+    else new K8sWatchTable(s"k8s_events(${path.get})", K8sEventSource.schema,
+      () => new K8sMicroBatchStream(path.get))
   }
   override def supportsExternalMetadata(): Boolean = false
 }
 
 object K8sEventSource {
+  private[k8s] val encoder: ExpressionEncoder[KubeEvent] = ExpressionEncoder[KubeEvent]()
   /** Output schema = the consumed v1.Event subset (FIXTURES.md §A.1),
     * i.e. the encoder schema of [[KubeEvent]]. */
-  val schema: StructType = Encoders.product[KubeEvent].schema
-}
-
-private[k8s] class K8sEventTable(path: String, endpoint: String,
-    token: Option[String], namespace: Option[String],
-    relistIntervalMs: Long = Long.MaxValue,
-    resyncBackoffMs: Long = 1000L,
-    maxEventsPerTrigger: Option[Int] = None)
-    extends Table with SupportsRead {
-  override def name(): String =
-    if (endpoint != null && endpoint.nonEmpty) s"k8s_events($endpoint)"
-    else s"k8s_events($path)"
-  override def schema(): StructType = K8sEventSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = K8sEventSource.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          if (endpoint != null && endpoint.nonEmpty)
-            new K8sHttpMicroBatchStream(endpoint, token, namespace,
-              relistIntervalMs, resyncBackoffMs, maxEventsPerTrigger)
-          else new K8sMicroBatchStream(path)
-      }
-    }
-}
-
-/** Offset = highest resourceVersion included so far. */
-case class K8sOffset(rv: Long) extends Offset {
-  override def json: String = rv.toString
+  val schema: StructType = encoder.schema
 }
 
 private[k8s] class K8sMicroBatchStream(path: String) extends MicroBatchStream {
@@ -120,81 +80,12 @@ private[k8s] class K8sMicroBatchStream(path: String) extends MicroBatchStream {
   override def stop(): Unit = ()
 }
 
+/** A file-replay slice: read (and decoded) where the partition runs. */
 private[k8s] case class K8sInputPartition(path: String, fromRv: Long, toRv: Long)
-  extends InputPartition
-
-private[k8s] object K8sReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[K8sInputPartition]
-    new PartitionReader[InternalRow] {
-      private val serializer =
-        ExpressionEncoder[KubeEvent]().createSerializer()
-      private val it = FileWatchClient.fetch(p.path, p.fromRv, p.toRv).iterator
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = serializer(it.next()).copy(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
-}
-
-/** Live micro-batch stream over [[HttpWatchClient]]. The client (and its
-  * watch thread + buffer) lives on the DRIVER where latestOffset runs;
-  * each planned partition carries its event slice to the executor (the
-  * socket-source pattern — a v1.Event feed is control-plane volume, and
-  * the slice is one micro-batch, not history). Offset commit trims the
-  * buffer, so memory holds only the uncommitted replay window. */
-private[k8s] class K8sHttpMicroBatchStream(endpoint: String,
-    token: Option[String], namespace: Option[String],
-    relistIntervalMs: Long = Long.MaxValue,
-    resyncBackoffMs: Long = 1000L,
-    maxEventsPerTrigger: Option[Int] = None)
-    extends MicroBatchStream with SupportsAdmissionControl {
-  private val client = HttpWatchClient.events(endpoint, token, namespace,
-    resyncBackoffMs = resyncBackoffMs, relistIntervalMs = relistIntervalMs)
-  override def initialOffset(): Offset = K8sOffset(0L)
-  // With SupportsAdmissionControl mixed in, the engine resolves offsets
-  // through the 2-arg overload below (same contract as the Kafka source).
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called instead of this")
-  override def getDefaultReadLimit: ReadLimit =
-    maxEventsPerTrigger.map(n => ReadLimit.maxRows(n.toLong))
-      .getOrElse(ReadLimit.allAvailable())
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val from = start.asInstanceOf[K8sOffset].rv
-    limit match {
-      case mr: ReadMaxRows => K8sOffset(client.rvAfter(from, mr.maxRows().toInt))
-      case _ => K8sOffset(client.latestRv())
-    }
-  }
-  override def deserializeOffset(json: String): Offset = K8sOffset(json.toLong)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    Array(K8sBufferPartition(client.fetch(
-      start.asInstanceOf[K8sOffset].rv, end.asInstanceOf[K8sOffset].rv)))
-  override def createReaderFactory(): PartitionReaderFactory = K8sBufferReaderFactory
-  override def commit(end: Offset): Unit =
-    client.trimCommitted(end.asInstanceOf[K8sOffset].rv)
-  override def stop(): Unit = client.close()
-}
-
-private[k8s] case class K8sBufferPartition(events: Seq[KubeEvent])
-  extends InputPartition
-
-private[k8s] object K8sBufferReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[K8sBufferPartition]
-    new PartitionReader[InternalRow] {
-      private val serializer =
-        ExpressionEncoder[KubeEvent]().createSerializer()
-      private val it = p.events.iterator
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = serializer(it.next()).copy(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    extends K8sPartition {
+  override def rows: Iterator[InternalRow] = {
+    val toRow = K8sEventSource.encoder.createSerializer()
+    FileWatchClient.fetch(path, fromRv, toRv).iterator.map(toRow(_).copy())
   }
 }
 

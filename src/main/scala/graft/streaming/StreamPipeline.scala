@@ -2,10 +2,11 @@ package graft.streaming
 
 import graft.k8s._
 import graft.sinks.NdjsonSink
+import graft.sources.k8s.Kubeconfig.KubeContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
+import org.apache.spark.sql.streaming.{DataStreamReader, GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
   StreamingQueryListener, Trigger}
 import org.apache.spark.storage.StorageLevel
 
@@ -289,39 +290,37 @@ object StreamPipeline {
     * (k8sclient.go:37-60): the config's `kubeconfig` file when set,
     * the in-cluster service account otherwise (config.go:11-17 — "" =
     * in-cluster). */
-  def liveContext(conf: GraftConfig): graft.sources.k8s.Kubeconfig.KubeContext =
+  def liveContext(conf: GraftConfig): KubeContext =
     if (conf.kubeconfig.nonEmpty)
       graft.sources.k8s.Kubeconfig.load(conf.kubeconfig)
     else graft.sources.k8s.Kubeconfig.inCluster()
 
-  /** The live EVENT watch stream built entirely from config:
-    * endpoint/token/namespace from `kubeconfig` (or in-cluster), and
-    * `resync_interval` → the client's periodic-relist knob (the
-    * reference hands the same value to its informer factory,
-    * main.go:82-90, config.go:20-24). */
-  def liveEventStream(spark: SparkSession, conf: GraftConfig): DataFrame = {
-    val kc = liveContext(conf)
-    var r = spark.readStream.format("graft.sources.k8s.K8sEventSource")
+  /** A live watch reader for the k8s source `format`: endpoint, token
+    * and namespace from `kc`, and `resync_interval` → the client's
+    * periodic-relist knob (the reference hands the same value to its
+    * informer factory, main.go:82-90, config.go:20-24). `graft.Main
+    * --endpoint` builds its event stream here too. */
+  private[graft] def liveReader(spark: SparkSession, format: String, kc: KubeContext,
+      conf: GraftConfig): DataStreamReader = {
+    var r = spark.readStream.format(s"graft.sources.k8s.$format")
       .option("endpoint", kc.server)
       .option("relistIntervalMs", (conf.resyncIntervalSec * 1000L).toString)
     kc.token.foreach(t => r = r.option("token", t))
     kc.namespace.foreach(ns => r = r.option("namespace", ns))
-    r.load()
+    r
   }
+
+  /** The live EVENT watch stream built entirely from config. */
+  def liveEventStream(spark: SparkSession, conf: GraftConfig): DataFrame =
+    liveReader(spark, "K8sEventSource", liveContext(conf), conf).load()
 
   /** The live SERVICE (or deployments, E5) watch stream from config —
     * feeds [[runServicesWatched]]. */
   def liveServiceStream(spark: SparkSession, conf: GraftConfig,
-      resource: String = "services"): Dataset[WatchedService] = {
-    val kc = liveContext(conf)
-    var r = spark.readStream.format("graft.sources.k8s.K8sServiceSource")
-      .option("endpoint", kc.server)
-      .option("resource", resource)
-      .option("relistIntervalMs", (conf.resyncIntervalSec * 1000L).toString)
-    kc.token.foreach(t => r = r.option("token", t))
-    kc.namespace.foreach(ns => r = r.option("namespace", ns))
-    r.load().as(org.apache.spark.sql.Encoders.product[WatchedService])
-  }
+      resource: String = "services"): Dataset[WatchedService] =
+    liveReader(spark, "K8sServiceSource", liveContext(conf), conf)
+      .option("resource", resource).load()
+      .as(org.apache.spark.sql.Encoders.product[WatchedService])
 
   /** The reference's PRIMARY entry contract (`k8stream --config
     * file.json`, main.go:28-97): the config file alone stands up the

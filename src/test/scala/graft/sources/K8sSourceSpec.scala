@@ -401,26 +401,80 @@ class K8sSourceSpec extends SparkSpec {
          |  "batch_interval": 30},
          | "kubeconfig": "$kcPath", "resync_interval": 1}"""
         .stripMargin.getBytes("UTF-8"))
+    // graft.Main has no test trigger override: the same config with a
+    // 1 s batch_interval stands in for triggerMs
+    val mainCfgPath = java.nio.file.Files.createTempFile("graft-live-main", ".json")
+    java.nio.file.Files.write(mainCfgPath,
+      new String(java.nio.file.Files.readAllBytes(cfgPath), "UTF-8")
+        .replace("\"batch_interval\": 30", "\"batch_interval\": 1")
+        .getBytes("UTF-8"))
     import spark.implicits._
-    graft.sinks.MemoryBatchSink.clear("liveuid")
     val ckpt = java.nio.file.Files.createTempDirectory("ckptlive").toString
-    val q = graft.streaming.StreamPipeline.runLive(cfgPath.toString, spark,
-      Seq.empty[graft.k8s.KubeObject].toDF(),
-      Seq.empty[graft.k8s.KubeNode].toDF(), ckpt, triggerMs = Some(100))
+    // The same law for two inputs: the config-only path, and graft.Main
+    // --endpoint naming the same server (its flags replace the kubeconfig)
+    val inputs = Seq[(String, () => org.apache.spark.sql.streaming.StreamingQuery)](
+      "runLive" -> (() => graft.streaming.StreamPipeline.runLive(
+        cfgPath.toString, spark,
+        Seq.empty[graft.k8s.KubeObject].toDF(),
+        Seq.empty[graft.k8s.KubeNode].toDF(), ckpt, triggerMs = Some(100))),
+      "Main.run --endpoint" -> (() => graft.Main.run(spark, Map(
+        "config" -> mainCfgPath.toString, "endpoint" -> base,
+        "token" -> "live-tok", "namespace" -> "payments"))))
+    try for ((input, start) <- inputs) {
+      lists.set(0)
+      auth.clear()
+      graft.sinks.MemoryBatchSink.clear("liveuid")
+      val q = start()
+      try {
+        assert(awaitTrue(30000) {
+          q.processAllAvailable()
+          graft.sinks.MemoryBatchSink.batches("liveuid").flatMap(_._2).flatten.size >= 2
+        }, s"$input: both listed events should land via the config-built live source")
+        val lines = graft.sinks.MemoryBatchSink.batches("liveuid").flatMap(_._2).flatten
+        assert(lines.exists(_.contains("\"id\":\"live1\"")), lines.mkString("\n"))
+        // kubeconfig token rode the requests
+        assert(auth.peek() == "Bearer live-tok", s"$input: auth seen: $auth")
+        // resync_interval=1s → relistIntervalMs=1000 reached the client:
+        // the LIST count keeps growing (without the knob there is exactly
+        // one LIST, because clean watch closes re-WATCH)
+        assert(awaitTrue(15000)(lists.get() >= 3),
+          s"$input: periodic relist should re-LIST, got ${lists.get()}")
+      } finally q.stop()
+    } finally srv.stop(0)
+  }
+
+  test("service source honours resyncBackoffMs: one WATCH in the 3 s " +
+    "after the first clean close") {
+    val watches = new java.util.concurrent.atomic.AtomicInteger(0)
+    val srv = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    srv.createContext("/api/v1/services", { ex =>
+      val query = Option(ex.getRequestURI.getQuery).getOrElse("")
+      val body =
+        if (query.contains("watch=true")) {
+          watches.incrementAndGet()
+          Array.empty[Byte] // clean close at once
+        } else
+          (s"""{"kind":"ServiceList","metadata":{"resourceVersion":"3"},""" +
+            s""""items":[${serviceJson(3, "s1", "web")}]}""").getBytes("UTF-8")
+      ex.sendResponseHeaders(200, if (body.isEmpty) -1 else body.length)
+      if (body.nonEmpty) ex.getResponseBody.write(body)
+      ex.close()
+    })
+    srv.start()
+    val q = spark.readStream
+      .format("graft.sources.k8s.K8sServiceSource")
+      .option("endpoint", s"http://127.0.0.1:${srv.getAddress.getPort}")
+      .option("resyncBackoffMs", "60000")
+      .load()
+      .writeStream.format("memory").queryName("svcbackoff")
+      .start()
     try {
-      assert(awaitTrue(30000) {
-        q.processAllAvailable()
-        graft.sinks.MemoryBatchSink.batches("liveuid").flatMap(_._2).flatten.size >= 2
-      }, "both listed events should land via the config-built live source")
-      val lines = graft.sinks.MemoryBatchSink.batches("liveuid").flatMap(_._2).flatten
-      assert(lines.exists(_.contains("\"id\":\"live1\"")), lines.mkString("\n"))
-      // kubeconfig token rode the requests
-      assert(auth.peek() == "Bearer live-tok", s"auth seen: $auth")
-      // resync_interval=1s → relistIntervalMs=1000 reached the client:
-      // the LIST count keeps growing (without the knob there is exactly
-      // one LIST, because clean watch closes re-WATCH)
-      assert(awaitTrue(15000)(lists.get() >= 3),
-        s"periodic relist should re-LIST, got ${lists.get()}")
+      assert(awaitTrue(30000)(watches.get() >= 1), "the first WATCH never opened")
+      Thread.sleep(3000)
+      // the 1 s default backoff would have re-WATCHed twice by now
+      assert(watches.get() == 1,
+        s"re-WATCH before resyncBackoffMs=60000 elapsed: ${watches.get()} WATCHes")
     } finally { q.stop(); srv.stop(0) }
   }
 
