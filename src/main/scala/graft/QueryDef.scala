@@ -51,4 +51,22 @@ object Sessions {
     clone.conf.set("spark.sql.shuffle.partitions", n.toString)
     clone
   }
+
+  /** Drop the blocks a query pinned for its own execution — caches,
+    * localCheckpoints, and the `st_*` memory-sink views that hold their
+    * full result on the driver — so a sweep of independent queries in one
+    * JVM does not accumulate every query's working set (observed: a 0.6 s
+    * groupBy timed at 34 s late in a leaky run). blocking=true: an async
+    * unpersist that lags on a loaded host leaves the next query running
+    * under the previous one's memory pressure. Each step is best-effort. */
+  def release(s: SparkSession): Unit = {
+    try s.catalog.clearCache() catch { case _: Throwable => () }
+    try s.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    catch { case _: Throwable => () }
+    try s.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("st_"))
+      .foreach(t => s.catalog.dropTempView(t.name))
+    catch { case _: Throwable => () }
+  }
 }

@@ -26,18 +26,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors += name -> String.valueOf(e.getMessage).take(500)
       }
-      // Queries are independent jobs: drop blocks this one pinned
-      // (caches, localCheckpoints, st_* memory-sink views) so the
-      // 140-query sweep doesn't accumulate storage or driver memory
-      // in the shared JVM.
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      try spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => () }
-      try spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.startsWith("st_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      catch { case _: Throwable => () }
+      Sessions.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -32,10 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object AnnIndex {
 
-  def isBuilt(dir: String): Boolean =
-    new java.io.File(s"$dir/postings/_SUCCESS").exists &&
-      new java.io.File(s"$dir/centroids/_SUCCESS").exists
-
   /** Build (or rebuild) the index from an embeddings frame
     * (vec_id, embedding array<float>, cellCol). One pass for centroids
     * (keyed avg), one for postings (norm fused into the write). */

@@ -1,59 +1,109 @@
 package graft.queries
 
+import java.nio.file.{FileSystemException, Files, Path, Paths,
+  StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
-/** Derive-once materialization of the relations many queries share —
-  * the `coPurchaseEdges` parquet-memo pattern (ClusterQueries)
-  * generalized: the first caller WRITES the derived relation to a local
-  * parquet artifact; every later caller — including per-query
-  * shuffle-partition session clones, which defeat `cache()` — just
-  * scans the small file. Disk rather than persist() on purpose: the
-  * sweep's between-query hygiene unpersists every RDD, and a production
-  * deployment at 100 TB materializes shared derivations exactly once
-  * (bucketed, columnar) for all downstream consumers — the AnnIndex
-  * train-once/probe-many shape applied to shingles, MinHash signatures,
-  * SimHash signatures, and the co-purchase edge relation.
+/** The query surface's one artifact store. Every on-disk artifact a
+  * query keeps — parquet memos, the IVF index, the bucketed copies, the
+  * binaryFile, schema-evolution and streaming replay stages, and the
+  * round-trip scratch dirs — lives at `/tmp/graft-<name>-<key>`.
   *
-  * The memo key folds in the SOURCE TABLE's latest mtime, so a
-  * regenerated fixture at the same path (the driver rewrites
-  * /root/testdata each round) invalidates the artifact instead of
-  * serving stale rows — the staleness hazard the bare dir-hash key of
-  * the original coPurchaseEdges memo carried. */
+  * Key: md5 hex of the dataset dir plus the stamp of each source table
+  * the artifact is derived from. A table's stamp is its total file size,
+  * file count and latest mtime (directories included, so deleting a part
+  * file moves it too). A table regenerated at the same path therefore
+  * gives every artifact derived from it a new dir instead of serving
+  * stale rows.
+  *
+  * Build-once artifacts ([[once]], [[memo]]): the build writes into a
+  * private sibling staging dir, published with one atomic rename. The
+  * target dir's existence is the done test, so no marker file is kept.
+  * When another JVM has published the same key first, the rename fails,
+  * the staging dir is deleted and the existing artifact is served, so two
+  * JVMs never overwrite each other's artifact. Within a JVM a per-key
+  * monitor runs each build once. The build runs outside any map compute
+  * because builds NEST (candidateEdges' build calls the signature memo),
+  * and a nested computeIfAbsent on one map is a "Recursive update"
+  * error. Nested monitors can't deadlock: nesting is one-directional
+  * (pair-level artifacts depend on signature-level ones, never the
+  * reverse).
+  *
+  * Per-call scratch dirs ([[path]]): round trips that write and read
+  * back within one call use the same key and overwrite the dir per call.
+  *
+  * The store never deletes a published artifact; `/tmp/graft-*` is safe
+  * to delete whenever no JVM using it runs. */
 private[queries] object Derived {
+  private val Root = Paths.get("/tmp")
+
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  private def stamp(p: String): Long = {
-    val f = new java.io.File(p)
-    val kids = Option(f.listFiles()).getOrElse(Array.empty)
-    kids.map(_.lastModified()).foldLeft(f.lastModified())(math.max)
+  private def stamp(table: Path): String =
+    if (!Files.exists(table)) "absent"
+    else {
+      val all = Files.walk(table)
+      try {
+        var size, files, mtime = 0L
+        all.iterator().asScala.foreach { p =>
+          mtime = math.max(mtime, Files.getLastModifiedTime(p).toMillis)
+          if (Files.isRegularFile(p)) { size += Files.size(p); files += 1 }
+        }
+        s"$size/$files/$mtime"
+      } finally all.close()
+    }
+
+  /** The artifact dir for `name` over dataset `d`, keyed on the source
+    * `tables`. Callers that overwrite it per call use it as is. */
+  def path(name: String, d: String, tables: String*): String = {
+    val src = (d +: tables.map(t =>
+      s"$t@${stamp(Paths.get(graft.Tables.path(d, t)))}")).mkString("|")
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest(src.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    Root.resolve(s"graft-$name-$key").toString
   }
 
-  /** Memoize `build` as a parquet artifact keyed on (tag, dataset dir,
-    * source-table mtime). Thread-safe via a per-artifact monitor; the
-    * build deliberately runs OUTSIDE any ConcurrentHashMap compute —
-    * builds NEST (candidateEdges' build calls the signature memo), and
-    * a nested computeIfAbsent on one map is a "Recursive update" error.
-    * Nested monitors can't deadlock here: nesting is one-directional
-    * (pair-level artifacts depend on signature-level ones, never the
-    * reverse). */
-  def memo(s: SparkSession, d: String, table: String, tag: String)(
-      build: => DataFrame): DataFrame = {
-    // Collision-resistant artifact key: md5 hex of (dataset dir, raw
-    // mtime stamp). The earlier 32-bit String.hashCode key could alias
-    // two datasets/mtime states onto one dir and silently serve the
-    // wrong artifact to a correctness sweep (and abs(Int.MinValue) is
-    // negative); a 128-bit digest cannot collide in practice.
-    val keySrc = d + "@" + stamp(graft.Tables.path(d, table))
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(keySrc.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val dir = s"/tmp/graft-rt-$tag-$key"
-    val lock = locks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      if (!new java.io.File(s"$dir/_SUCCESS").exists)
-        build.write.mode("overwrite").parquet(dir)
+  /** The build-once artifact [[path]]`(name, d, tables)`: when it is
+    * absent, `build` writes it into the staging dir it is given, which is
+    * then published. Returns the artifact dir. */
+  def once(name: String, d: String, tables: String*)(
+      build: String => Unit): String = {
+    val dir = Paths.get(path(name, d, tables: _*))
+    locks.computeIfAbsent(dir.toString, _ => new Object).synchronized {
+      if (!Files.exists(dir)) {
+        val stage = dir.resolveSibling(
+          s"${dir.getFileName}.staging-${java.util.UUID.randomUUID}")
+        try {
+          build(stage.toString)
+          publish(stage, dir)
+        } finally deleteTree(stage)
+      }
     }
-    s.read.parquet(dir)
+    dir.toString
   }
+
+  /** Rename `stage` to `dir`; when another process has published `dir`
+    * first, keep its artifact (the caller deletes `stage`). Linux fails a
+    * rename onto a non-empty dir with ENOTEMPTY, which Java raises as a
+    * plain FileSystemException. */
+  private def publish(stage: Path, dir: Path): Unit =
+    try Files.move(stage, dir, StandardCopyOption.ATOMIC_MOVE)
+    catch { case _: FileSystemException if Files.isDirectory(dir) => () }
+
+  /** Memoize `build` as a parquet artifact derived from `table`. Disk
+    * rather than persist() on purpose: per-query session clones defeat
+    * `cache()`, and the sweep's between-query hygiene unpersists every
+    * RDD, so every later caller just scans the small file. */
+  def memo(s: SparkSession, d: String, table: String, tag: String)(
+      build: => DataFrame): DataFrame =
+    s.read.parquet(once(s"rt-$tag", d, table)(build.write.parquet(_)))
+
+  def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val all = Files.walk(p)
+      try all.iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      finally all.close()
+    }
 }

@@ -119,14 +119,6 @@ object ExtensionQueries {
       .select(col("m1"), col("m2"), col("hamming"))
   }
 
-  private def tmpDir(tag: String, d: String): String = {
-    // md5 key, same discipline as Derived.memo: the 32-bit hashCode
-    // could alias two dataset dirs onto one staging dir
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"/tmp/graft-rt-$tag-$key"
-  }
-
   def all: Seq[Q] = Seq(
 
     // OBSERVED SCAN METRICS (Dataset.observe / Observation API) — the
@@ -561,7 +553,7 @@ object ExtensionQueries {
          |      FROM events WHERE event_id < 5000)
          |GROUP BY event_type
          |ORDER BY event_type""") { (s, d) =>
-      val dir = tmpDir("ndjson", d)
+      val dir = Derived.path("rt-ndjson", d, "events")
       Tables.events(s, d)
         .filter(col("event_id") < 5000)
         .select(col("event_id"), col("event_type"), col("value"),
@@ -589,7 +581,7 @@ object ExtensionQueries {
         |FROM nation
         |GROUP BY n_name
         |ORDER BY n_name""") { (s, d) =>
-      val dir = tmpDir("ndjsonv2", d)
+      val dir = Derived.path("rt-ndjsonv2", d, "nation")
       Tables.nation(s, d)
         .select(to_json(struct(col("n_nationkey"), col("n_name"),
           col("n_regionkey"))).as("value"))
@@ -610,7 +602,7 @@ object ExtensionQueries {
         |FROM part
         |GROUP BY p_brand
         |ORDER BY p_brand""") { (s, d) =>
-      val dir = tmpDir("csv", d)
+      val dir = Derived.path("rt-csv", d, "part")
       Tables.part(s, d)
         .select(col("p_partkey"), col("p_brand"), col("p_size"))
         .write.mode("overwrite").option("header", "true").csv(dir)
@@ -638,14 +630,12 @@ object ExtensionQueries {
         |  md5(text || chr(10)) AS digest
         |FROM documents WHERE doc_id < 300
         |ORDER BY doc_id""") { (s, d) =>
-      val dir = tmpDir("binf", d)
-      val done = new java.io.File(s"$dir/_SUCCESS").exists
-      if (!done)
+      val dir = Derived.once("rt-binf", d, "documents")(
         Tables.documents(s, d)
           .filter(col("doc_id") < 300)
           .select(col("doc_id"), col("text"))
           .repartition(col("doc_id"))
-          .write.mode("overwrite").partitionBy("doc_id").text(dir)
+          .write.partitionBy("doc_id").text(_))
       s.read.format("binaryFile")
         .option("pathGlobFilter", "*.txt").load(dir)
         .groupBy(col("doc_id").cast("bigint").as("doc_id"))
@@ -667,16 +657,14 @@ object ExtensionQueries {
         |  CASE WHEN c_custkey % 2 = 0 THEN c_mktsegment END AS c_mktsegment
         |FROM customer
         |ORDER BY c_custkey""") { (s, d) =>
-      val dir = tmpDir("evo", d)
-      val done = new java.io.File(s"$dir/v2/_SUCCESS").exists
-      if (!done) {
+      val dir = Derived.once("rt-evo", d, "customer") { stage =>
         val c = Tables.customer(s, d)
         c.filter(col("c_custkey") % 2 =!= 0)
           .select(col("c_custkey"), col("c_name"))
-          .write.mode("overwrite").parquet(s"$dir/v1")
+          .write.parquet(s"$stage/v1")
         c.filter(col("c_custkey") % 2 === 0)
           .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-          .write.mode("overwrite").parquet(s"$dir/v2")
+          .write.parquet(s"$stage/v2")
       }
       s.read.option("mergeSchema", "true").parquet(s"$dir/v1", s"$dir/v2")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
@@ -694,7 +682,7 @@ object ExtensionQueries {
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
         |GROUP BY n_nationkey, n_name
         |ORDER BY n_nationkey""") { (s, d) =>
-      val dir = tmpDir("orc", d)
+      val dir = Derived.path("rt-orc", d, "supplier")
       Tables.supplier(s, d)
         .select(col("s_suppkey"), col("s_nationkey"))
         .write.mode("overwrite").orc(dir)
@@ -717,7 +705,7 @@ object ExtensionQueries {
         |WHERE o_orderstatus IN ('F', 'O')
         |GROUP BY o_orderstatus
         |ORDER BY o_orderstatus""") { (s, d) =>
-      val dir = tmpDir("part", d)
+      val dir = Derived.path("rt-part", d, "orders")
       Tables.orders(s, d)
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(dir)
       s.read.parquet(dir)

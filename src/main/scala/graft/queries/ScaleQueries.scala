@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-technique exemplars (SURVEY.md §2.2 joins row + BASELINE 100 TB
@@ -10,29 +11,36 @@ import org.apache.spark.sql.functions._
   */
 object ScaleQueries {
 
-  private def tmpDir(tag: String, d: String): String =
-    s"/tmp/graft-rt-$tag-${math.abs(d.hashCode)}"
-
-  /** Idempotent bucketed-table materialization. First call per sf dir
-    * writes + registers; later calls (same JVM: catalog hit; new JVM:
-    * _SUCCESS present) just (re)register the external bucketed table —
-    * DDL carries the CLUSTERED/SORTED BY metadata a plain parquet read
-    * would lose. */
-  private def ensureBucketed(s: org.apache.spark.sql.SparkSession,
-      table: String, path: String, schema: String, key: String,
-      data: => org.apache.spark.sql.DataFrame): Unit = {
-    val written = new java.io.File(s"$path/_SUCCESS").exists
-    if (!written) {
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      data.write.mode("overwrite").format("parquet")
-        .bucketBy(8, key).sortBy(key)
-        .option("path", path).saveAsTable(table)
-    } else if (!s.catalog.tableExists(table)) {
-      s.sql(
-        s"""CREATE TABLE $table ($schema) USING parquet
-           |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
-           |LOCATION '$path'""".stripMargin)
+  /** The bucketed copies of lineitem and orders for `d`, built once per
+    * artifact key and served as tables named after that key, so each
+    * dataset joins its own copies. The DDL carries the CLUSTERED/SORTED
+    * BY metadata a plain parquet read would lose. */
+  private def bucketedSides(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val dir = Derived.once("rt-bucket", d, "lineitem", "orders") { stage =>
+      def write(df: DataFrame, key: String, sub: String): Unit = {
+        // bucketBy needs saveAsTable; the table is external, so dropping
+        // it leaves the files in the stage
+        val t = "graft_bucket_stage_" +
+          java.util.UUID.randomUUID.toString.replace("-", "")
+        df.write.format("parquet").bucketBy(8, key).sortBy(key)
+          .option("path", s"$stage/$sub").saveAsTable(t)
+        s.sql(s"DROP TABLE $t")
+      }
+      write(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity")),
+        "l_orderkey", "li")
+      write(Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority")),
+        "o_orderkey", "ord")
     }
+    val name = java.nio.file.Paths.get(dir).getFileName.toString.replace('-', '_')
+    def table(sub: String, schema: String, key: String): DataFrame = {
+      s.sql(
+        s"""CREATE TABLE IF NOT EXISTS ${name}_$sub ($schema) USING parquet
+           |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
+           |LOCATION '$dir/$sub'""".stripMargin)
+      s.table(s"${name}_$sub")
+    }
+    (table("li", "l_orderkey BIGINT, l_quantity DOUBLE", "l_orderkey"),
+      table("ord", "o_orderkey BIGINT, o_orderpriority STRING", "o_orderkey"))
   }
 
   def all: Seq[Q] = Seq(
@@ -66,8 +74,8 @@ object ScaleQueries {
     // join key → the join needs NO shuffle (no Exchange above the scans;
     // check with graft.Explain). This is the 100 TB fact-fact join
     // strategy: pay the shuffle once at write time, never per query —
-    // which is why the bucketed copies are written at most once per sf
-    // dir (testdata is immutable) and re-registered from disk afterwards.
+    // which is why the bucketed copies are written at most once per
+    // artifact key (see Derived).
     Q("join_bucketed",
       s"""SELECT o_orderpriority,
          |  CAST(count(*) AS BIGINT) AS n_items,
@@ -75,19 +83,12 @@ object ScaleQueries {
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          |GROUP BY o_orderpriority
          |ORDER BY o_orderpriority""") { (s, d) =>
-      val dir = tmpDir("bucket", d)
-      ensureBucketed(s, "graft_li_bucketed", s"$dir/li",
-        "l_orderkey BIGINT, l_quantity DOUBLE", "l_orderkey",
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_quantity")))
-      ensureBucketed(s, "graft_ord_bucketed", s"$dir/ord",
-        "o_orderkey BIGINT, o_orderpriority STRING", "o_orderkey",
-        Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority")))
+      val (li, ord) = bucketedSides(s, d)
       // merge hint: at this SF the planner would broadcast the small
       // side; the point of the exemplar is the bucketed sort-merge join
       // with NO Exchange below it (the 100 TB fact-fact path).
-      s.table("graft_li_bucketed")
-        .hint("merge")
-        .join(s.table("graft_ord_bucketed"),
+      li.hint("merge")
+        .join(ord,
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_items"),

@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -53,30 +55,31 @@ object StreamingQueries {
 
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     // The file source needs a directory; testdata is read-only, so stage
-    // the single parquet file into a local replay dir once per sf.
-    val src = java.nio.file.Paths.get(Tables.path(d, "events"))
-    val dir = java.nio.file.Paths.get(
-      "/tmp/graft-replay-" + datasetFingerprint(d))
-    // Staging-done marker: underscore-prefixed, so Spark's file listing
-    // ignores it (same convention as _SUCCESS).
-    val marker = dir.resolve("_staged")
-    val dst = dir.resolve("events.parquet")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.createDirectories(dir)
-      import java.nio.file.StandardCopyOption.REPLACE_EXISTING
-      if (java.nio.file.Files.isDirectory(src)) {
+    // the events parquet into a local replay dir once per artifact key.
+    val src = Paths.get(Tables.path(d, "events"))
+    readEventsReplay(s, Derived.once("replay", d, "events") { stage =>
+      val dir = Files.createDirectories(Paths.get(stage))
+      if (Files.isDirectory(src)) {
         // Spark-written fixtures are directories of part files — stage
         // each data file flat (the replay source lists the dir anyway).
-        val it = java.nio.file.Files.list(src)
+        val it = Files.list(src)
         try it.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .forEach(p => java.nio.file.Files.copy(
-            p, dir.resolve("events-" + p.getFileName.toString),
-            REPLACE_EXISTING))
+          .forEach(p => Files.copy(p, dir.resolve("events-" + p.getFileName)))
         finally it.close()
-      } else java.nio.file.Files.copy(src, dst, REPLACE_EXISTING)
-      java.nio.file.Files.createFile(marker)
-    }
-    readEventsReplay(s, dir.toString)
+      } else Files.copy(src, dir.resolve("events.parquet"))
+    })
+  }
+
+  /** Write `df` as the single parquet file `dst`: Spark writes a dir of
+    * parts, so one part is written to a hidden sibling dir and moved out. */
+  private def writeFile(df: DataFrame, dst: Path): Unit = {
+    val tmp = dst.resolveSibling("_" + dst.getFileName)
+    df.coalesce(1).write.parquet(tmp.toString)
+    val parts = Files.list(tmp)
+    try Files.move(parts.filter(_.getFileName.toString.endsWith(".parquet"))
+      .findFirst().get(), dst)
+    finally parts.close()
+    Derived.deleteTree(tmp)
   }
 
   /** Run `build(source)` as a streaming query into a memory sink, block
@@ -148,23 +151,17 @@ object StreamingQueries {
     * as micro-batch 1 plus a far-future sentinel click+purchase pair
     * (user -1, year 2100) as micro-batch 2, which advances both sides'
     * watermarks past every real event so held outer rows emit. Staged
-    * once per sf dir (testdata is immutable); the sentinel file gets a
-    * later mtime so maxFilesPerTrigger=1 replays it second. */
-  private def sentinelReplayDir(s: SparkSession, d: String): String = {
-    val dir = java.nio.file.Paths.get(
-      "/tmp/graft-ssreplay-" + datasetFingerprint(d))
-    val done = dir.resolve("_STAGED")
-    if (!java.nio.file.Files.exists(done)) {
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(Tables.path(d, "events")),
-        dir.resolve("00-events.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    * once per artifact key; the sentinel file gets a later mtime so
+    * maxFilesPerTrigger=1 replays it second. */
+  private def sentinelReplayDir(s: SparkSession, d: String): String =
+    Derived.once("ssreplay", d, "events") { stage =>
+      val dir = Files.createDirectories(Paths.get(stage))
+      val events = dir.resolve("00-events.parquet")
+      Files.copy(Paths.get(Tables.path(d, "events")), events)
       // Sentinel wire schema must match the copied events file's physical
       // ts type (long nanos vs TIMESTAMP(MICROS)) — the replay dir is
       // read under one declared schema covering both files.
       val farFutureSec = 4102444800L // 2100-01-01 epoch seconds
-      val tmp = java.nio.file.Files.createTempDirectory("graft-sentinel")
       import s.implicits._
       val base = Seq(
         (-1L, farFutureSec, -1L, "click", 0.0, "{}"),
@@ -176,47 +173,25 @@ object StreamingQueries {
           base.withColumn("ts", col("ts") * lit(1000000000L)) // long nanos
         else // match the events file exactly (TIMESTAMP vs TIMESTAMP_NTZ)
           base.withColumn("ts", timestamp_seconds(col("ts")).cast(srcTs))
-      sentinel.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.list(tmp).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).next()
-      }
-      java.nio.file.Files.copy(part, dir.resolve("zz-sentinel.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // the scratch write dir has served its purpose — don't litter /tmp
-      locally {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => try java.nio.file.Files.delete(p)
-            catch { case _: Throwable => () })
-      }
-      java.nio.file.Files.setLastModifiedTime(dir.resolve("zz-sentinel.parquet"),
-        java.nio.file.attribute.FileTime.fromMillis(
-          java.nio.file.Files.getLastModifiedTime(
-            dir.resolve("00-events.parquet")).toMillis + 60000))
-      java.nio.file.Files.createFile(done)
+      val sentinelFile = dir.resolve("zz-sentinel.parquet")
+      writeFile(sentinel, sentinelFile)
+      Files.setLastModifiedTime(sentinelFile, FileTime.fromMillis(
+        Files.getLastModifiedTime(events).toMillis + 60000))
     }
-    dir.toString
-  }
 
   /** documents as a 4-file replay stream consumed one file per
     * micro-batch — multi-batch on purpose, so stateful operators
-    * genuinely carry state across batch boundaries. Staged once per sf
-    * dir (testdata is immutable). */
+    * genuinely carry state across batch boundaries. Staged once per
+    * artifact key. */
   private def documentsStream(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Paths.get(
-      "/tmp/graft-docreplay-" + datasetFingerprint(d))
-    if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
-      Tables.documents(s, d).repartition(4)
-        .write.mode("overwrite").parquet(dir.toString)
-    }
+    val dir = Derived.once("docreplay", d, "documents")(
+      Tables.documents(s, d).repartition(4).write.parquet(_))
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
       StructField("n_chars", LongType)))
     s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
+      .parquet(dir)
   }
 
   private def runDocsStream(s: SparkSession, d: String)(
@@ -589,7 +564,7 @@ object StreamingQueries {
          |FROM events
          |GROUP BY event_type
          |ORDER BY event_type""") { (s, d) =>
-      val mvDir = "/tmp/graft-mv-" + datasetFingerprint(d)
+      val mvDir = Derived.path("mv", d, "events")
       val agg = eventsStream(s, d)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"), expr(decSum("value")).as("val_sum"))
@@ -616,11 +591,7 @@ object StreamingQueries {
           java.nio.file.Files.list(root).iterator().asScala
             .filter(p => p.getFileName.toString.startsWith("epoch-") &&
               p.getFileName.toString != s"epoch-$epoch")
-            .foreach { p =>
-              java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-                .foreach(f => try java.nio.file.Files.delete(f)
-                catch { case _: Throwable => () })
-            }
+            .foreach(Derived.deleteTree)
         }.start()
       try { q.processAllAvailable() } finally { q.stop() }
       val latest = new String(java.nio.file.Files.readAllBytes(
@@ -1431,71 +1402,25 @@ object StreamingQueries {
         .orderBy(col("stratum"))
     })
 
-  /** Staging key for dataset `d`: md5 over the ABSOLUTE PATH plus the
-    * events table's (size, mtime). Path-distinct datasets can never
-    * collide (the old 32-bit hashCode could), and regenerating a fixture
-    * in place changes the fingerprint — staged replay dirs and MV dirs
-    * go stale-proof instead of silently replaying old data behind a
-    * one-shot _STAGED marker. */
-  private def datasetFingerprint(d: String): String = {
-    import java.nio.file.{Files, Paths}
-    val ev = Paths.get(d, "events.parquet")
-    val stamp =
-      if (Files.exists(ev)) {
-        // a parquet "file" may be a directory of parts: fold their stats
-        val all = Files.walk(ev).iterator()
-        var size = 0L; var mtime = 0L
-        all.forEachRemaining { p =>
-          if (Files.isRegularFile(p)) {
-            size += Files.size(p)
-            mtime = math.max(mtime, Files.getLastModifiedTime(p).toMillis)
-          }
-        }
-        s"$size-$mtime"
-      } else "absent"
-    // v2: staging layout changed (sentinel ts type now matches the
-    // events file's physical type) — new key orphans pre-v2 dirs.
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|$stamp|v2".getBytes("UTF-8"))
-    md.take(8).map(b => f"$b%02x").mkString
-  }
-
   /** Events staged as 4 time-quartile parquet files with ascending
     * mtimes, so maxFilesPerTrigger=1 replays them in event-time order —
     * the arrival discipline an ordered log (Kafka partition, resync
-    * replay) provides in production. Staged once per dataset
-    * fingerprint; the ntile global sort is harness-side staging cost,
-    * not operator cost. */
-  private def timeOrderedReplayDir(s: SparkSession, d: String): String = {
-    import java.nio.file.{Files, Paths}
-    val dir = Paths.get("/tmp/graft-tqreplay-" + datasetFingerprint(d))
-    val done = dir.resolve("_STAGED")
-    if (!Files.exists(done)) {
-      Files.createDirectories(dir)
+    * replay) provides in production. Staged once per artifact key; the
+    * ntile global sort is harness-side staging cost, not operator cost. */
+  private def timeOrderedReplayDir(s: SparkSession, d: String): String =
+    Derived.once("tqreplay", d, "events") { stage =>
+      val dir = Files.createDirectories(Paths.get(stage))
       val w = org.apache.spark.sql.expressions.Window
         .orderBy("ts", "event_id")
       val parts = Tables.load(s, d, "events") // raw wire schema, ts = long nanos
         .withColumn("__q", ntile(4).over(w))
       val base = System.currentTimeMillis()
       for (i <- 1 to 4) {
-        val tmp = Files.createTempDirectory("graft-tq")
-        parts.filter(col("__q") === i).drop("__q").coalesce(1)
-          .write.mode("overwrite").parquet(tmp.toString)
-        import scala.jdk.CollectionConverters._
-        val part = Files.list(tmp).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).next()
         val dst = dir.resolve(f"q$i%02d.parquet")
-        Files.copy(part, dst,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(base + i * 60000L))
-        Files.walk(tmp).iterator().asScala.toSeq.reverse
-          .foreach(p => try Files.delete(p) catch { case _: Throwable => () })
+        writeFile(parts.filter(col("__q") === i).drop("__q"), dst)
+        Files.setLastModifiedTime(dst, FileTime.fromMillis(base + i * 60000L))
       }
-      Files.createFile(done)
     }
-    dir.toString
-  }
 
   /** SCD2 oracle, shared by stream_scd2 (fMGWS) and stream_scd2_tws
     * (v2 state API): closed intervals from the lag-window batch build. */

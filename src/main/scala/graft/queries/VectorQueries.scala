@@ -20,8 +20,10 @@ import org.apache.spark.sql.expressions.Window
   */
 object VectorQueries {
 
-  private def tmpDir(tag: String, d: String): String =
-    s"/tmp/graft-rt-$tag-${math.abs(d.hashCode)}"
+  /** The IVF index over `d`'s corpus, built once per artifact key. */
+  private def ivfIndex(s: SparkSession, d: String): String =
+    Derived.once("rt-ivfidx", d, "embeddings")(
+      graft.operators.AnnIndex.build(Tables.embeddings(s, d), _))
 
   /** Shared oracle for the IVF search, parametric in nprobe (the
     * materialized-index variant must return the identical answer; the
@@ -557,7 +559,7 @@ object VectorQueries {
 
     // IVF with a MATERIALIZED index — the train-once/probe-many split
     // every production ANN deployment runs. The index is two on-disk
-    // relations built at most once per corpus (testdata is immutable):
+    // relations built at most once per corpus (see Derived):
     // centroids (tiny, broadcast at probe time) and posting lists
     // written PARTITIONED BY cell, so probing a cell is a partition-
     // pruned directory read, not a corpus scan — at 100 TB the probe
@@ -571,9 +573,7 @@ object VectorQueries {
       // partition-pruned to the assigned cells (AnnIndexSpec pins the
       // numFiles metric); build cost amortizes across probes — the
       // production serving shape at 100 TB.
-      val dir = tmpDir("ivfidx", d)
-      if (!graft.operators.AnnIndex.isBuilt(dir))
-        graft.operators.AnnIndex.build(Tables.embeddings(s, d), dir)
+      val dir = ivfIndex(s, d)
       val queries = Tables.embeddings(s, d)
         .filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -587,9 +587,7 @@ object VectorQueries {
     // pins the per-rank cosine monotonicity law). The oracle is the
     // same relational IVF with the assign cut widened to rn <= 2.
     Q("sim_knn_ivf_nprobe2", ivfOracle(2)) { (s, d) =>
-      val dir = tmpDir("ivfidx", d)
-      if (!graft.operators.AnnIndex.isBuilt(dir))
-        graft.operators.AnnIndex.build(Tables.embeddings(s, d), dir)
+      val dir = ivfIndex(s, d)
       val queries = Tables.embeddings(s, d)
         .filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -1449,9 +1447,7 @@ object VectorQueries {
          |  CAST(matched AS BIGINT) AS matched,
          |  round(matched / 3.0, 4) AS recall
          |FROM u ORDER BY qid, nprobe""") { (s, d) =>
-      val dir = tmpDir("ivfidx", d)
-      if (!graft.operators.AnnIndex.isBuilt(dir))
-        graft.operators.AnnIndex.build(Tables.embeddings(s, d), dir)
+      val dir = ivfIndex(s, d)
       val v = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").as("e"))
         .withColumn("nrm", expr(normSpark))

@@ -12,8 +12,9 @@ import java.sql.Timestamp
   * doc in its designed cell, SES reproduces S₁=y₁ / Sₜ=½yₜ+½Sₜ₋₁ by
   * hand, burstiness VMR matches the planted per-doc count variance,
   * the wedge cap excises a planted over-degree part and reports
-  * exactly C(d,2) suppressed pairs, and the Derived memo invalidates
-  * when its source table's mtime moves. */
+  * exactly C(d,2) suppressed pairs, and the Derived artifacts (the
+  * shingle memo, the schema-evolution stage, the IVF index) invalidate
+  * when their source table's mtime moves. */
 class Round12OpsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -453,5 +454,38 @@ class Round12OpsSpec extends SparkSpec {
     dir.listFiles().foreach(_.setLastModified(bump))
     val second = TextQueries.shingles(spark, d).count()
     assert(second == 5, s"stale memo served: got $second shingles")
+    // The same law for the other build-once artifacts: after the source
+    // table is regenerated in place, the query answers as it does over a
+    // fresh dir holding the new rows.
+    def customers(n: Int)(d: String): Unit =
+      (1L to n).map(i => (i, s"Customer#$i", s"SEG${i % 5}"))
+        .toDF("c_custkey", "c_name", "c_mktsegment")
+        .write.mode("overwrite").parquet(s"$d/customer.parquet")
+    def embeddings(ids: Seq[Long], salt: Int)(d: String): Unit =
+      ids.map(i => (i, Array.tabulate(4)(j => ((i * 7 + j * salt) % 11 + 1).toFloat),
+          (i % 2).toInt))
+        .toDF("vec_id", "embedding", "label")
+        .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    val inputs = Seq(
+      ("src_schema_evolution", "customer", customers(150) _, customers(1500) _),
+      ("sim_knn_ivf_indexed", "embeddings", embeddings(0L until 30L, 3) _,
+        embeddings((0L until 10L) ++ (1000L until 1020L), 5) _))
+    for ((query, table, before, after) <- inputs) {
+      def answer(d: String): Seq[String] =
+        SparkEntry.queries(query)(spark, d).collect().map(_.toString).toSeq
+      val d = tempDir("memo")
+      before(d)
+      val old = answer(d)
+      after(d)
+      val t = new java.io.File(s"$d/$table.parquet")
+      val bump = System.currentTimeMillis() + 5000
+      t.setLastModified(bump)
+      t.listFiles().foreach(_.setLastModified(bump))
+      val fresh = tempDir("memo-fresh")
+      after(fresh)
+      val want = answer(fresh)
+      assert(want != old, s"$query: the two fixtures must answer differently")
+      assert(answer(d) == want, s"$query: stale artifact served")
+    }
   }
 }
