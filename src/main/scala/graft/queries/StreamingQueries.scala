@@ -204,21 +204,6 @@ object StreamingQueries {
     s8.table(name)
   }
 
-  /** End-to-end replay throughput probe for Bench: replays the sf's
-    * events through watermark + tumbling-window aggregation (the
-    * BASELINE.md §B "streaming pipeline throughput" shape) and returns
-    * (events, wallSeconds). */
-  def replayThroughput(s: SparkSession, d: String): (Long, Double) = {
-    val t0 = System.nanoTime()
-    val out = runToTable(s, d, "complete") { src =>
-      src.withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"))
-    }
-    val n = out.agg(sum(col("cnt"))).collect()(0).getLong(0)
-    (n, (System.nanoTime() - t0) / 1e9)
-  }
-
   def all: Seq[Q] = Seq(
 
     // Tumbling 1-hour window aggregation per event type.

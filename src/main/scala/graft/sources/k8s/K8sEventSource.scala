@@ -11,7 +11,6 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import scala.jdk.CollectionConverters._
 
 /** Kubernetes event-watch source as a DataSourceV2 `MicroBatchStream`
   * (SURVEY.md §2.1 S1/S2 live mode, §4.3 "only genuinely novel physical
@@ -134,8 +133,15 @@ object FileWatchClient {
       val cached = parsed.get(path)
       if (cached != null && cached._1 == size && cached._2 == mtime) cached._3
       else {
-        val events = java.nio.file.Files.readAllLines(f).asScala.toSeq
-          .filter(_.trim.nonEmpty)
+        val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        val lines = text.linesIterator.filter(_.trim.nonEmpty).toSeq
+        // A last line without its newline may be a writer's unfinished
+        // append: hold it back until it parses (a later poll sees the
+        // grown file). A complete last line without a trailing newline
+        // still parses and is read.
+        val torn = !text.endsWith("\n") && lines.nonEmpty &&
+          scala.util.Try(mapper.readValue(lines.last, classOf[WireEvent])).isFailure
+        val events = (if (torn) lines.init else lines)
           .map(l => mapper.readValue(l, classOf[WireEvent]))
         parsed.put(path, (size, mtime, events))
         events

@@ -105,7 +105,7 @@ private[ndjson] class NdjsonBatchWrite(path: String, queryId: String,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     // CaseInsensitiveStringMap hands options through with lowercased keys.
-    new NdjsonWriterFactory(path, tag, opts.getOrElse("failoncontains", ""),
+    new NdjsonWriterFactory(path, tag,
       opts.getOrElse("maxrecordsperfile", "0").toLong, hconf)
 
   /** Driver-side publish: optionally clear previous output (truncate =
@@ -155,11 +155,11 @@ private[ndjson] class NdjsonBatchWrite(path: String, queryId: String,
 }
 
 private[ndjson] class NdjsonWriterFactory(path: String, tag: String,
-    failOnContains: String, maxRecordsPerFile: Long,
-    hconf: SerializableHadoopConf) extends DataWriterFactory {
+    maxRecordsPerFile: Long, hconf: SerializableHadoopConf)
+    extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new NdjsonDataWriter(path, tag, partitionId, taskId, failOnContains,
-      maxRecordsPerFile, hconf)
+    new NdjsonDataWriter(path, tag, partitionId, taskId, maxRecordsPerFile,
+      hconf)
 }
 
 /** One gzip stream per task; rows are never buffered. The staged name
@@ -172,8 +172,8 @@ private[ndjson] class NdjsonWriterFactory(path: String, tag: String,
   * INSIDE the connector, so no published file ever exceeds the cap
   * regardless of partition sizes. */
 private[ndjson] class NdjsonDataWriter(path: String, tag: String,
-    partitionId: Int, taskId: Long, failOnContains: String,
-    maxRecordsPerFile: Long, hconf: SerializableHadoopConf)
+    partitionId: Int, taskId: Long, maxRecordsPerFile: Long,
+    hconf: SerializableHadoopConf)
     extends DataWriter[InternalRow] {
 
   private def chunkPath(k: Int) = new Path(path,
@@ -197,9 +197,6 @@ private[ndjson] class NdjsonDataWriter(path: String, tag: String,
 
   override def write(record: InternalRow): Unit = {
     val line = record.getUTF8String(0)
-    if (failOnContains.nonEmpty && line != null &&
-      line.toString.contains(failOnContains))
-      throw new RuntimeException(s"injected failure on: $line") // test knob
     if (line != null) {
       if (maxRecordsPerFile > 0 && rowsInChunk >= maxRecordsPerFile) roll()
       out.write(line.getBytes)

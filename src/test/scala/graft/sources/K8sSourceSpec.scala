@@ -71,6 +71,32 @@ class K8sSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a torn last line waits for its newline; once finished it lands exactly once") {
+    val file = Files.createTempDirectory("k8storn").resolve("watch.ndjson").toString
+    append(file, FileWatchClient.toLine(1, ev("a")))
+    val q = spark.readStream
+      .format(classOf[K8sEventSource].getName)
+      .option("path", file)
+      .load()
+      .writeStream.format("memory").queryName("k8storn")
+      .start()
+    def uids: Seq[String] =
+      spark.table("k8storn").select("uid").collect().map(_.getString(0)).sorted.toSeq
+    try {
+      q.processAllAvailable()
+      assert(uids == Seq("a"))
+      // a writer's append caught halfway: no newline, not yet valid JSON
+      val line = FileWatchClient.toLine(2, ev("b"))
+      val (head, rest) = line.splitAt(line.length / 2)
+      Files.write(Paths.get(file), head.getBytes("UTF-8"), StandardOpenOption.APPEND)
+      q.processAllAvailable()
+      assert(uids == Seq("a"))
+      append(file, rest)
+      q.processAllAvailable()
+      assert(uids == Seq("a", "b"))
+    } finally q.stop()
+  }
+
   // ------------------------- live HTTP watch client (S1/S2 live mode) --
 
   /** v1.Event JSON as the API server serves it. */
@@ -84,46 +110,6 @@ class K8sSourceSpec extends SparkSpec {
        | "source":{"component":"kubelet","host":"n1"}}""".stripMargin
       .replaceAll("\n\\s*", "")
 
-  /** Minimal API-server stub: LIST returns the current store; WATCH
-    * streams everything above the requested rv, then closes (the client's
-    * resync loop re-connects — exactly the behavior under test). */
-  private class StubApiServer {
-    val store = new java.util.concurrent.ConcurrentSkipListMap[Long, String]()
-    val authSeen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    private val srv = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    srv.createContext("/api/v1/events", { ex =>
-      authSeen.add(Option(ex.getRequestHeaders.getFirst("Authorization")).getOrElse(""))
-      val query = Option(ex.getRequestURI.getQuery).getOrElse("")
-      import scala.jdk.CollectionConverters._
-      if (query.contains("watch=true")) {
-        val fromRv = query.split("&").collectFirst {
-          case kv if kv.startsWith("resourceVersion=") =>
-            kv.substring("resourceVersion=".length).toLong
-        }.getOrElse(0L)
-        val lines = store.tailMap(fromRv, false).values.asScala
-          .map(j => s"""{"type":"ADDED","object":$j}""").mkString("\n")
-        val body = (if (lines.isEmpty) "" else lines + "\n").getBytes("UTF-8")
-        ex.sendResponseHeaders(200, if (body.isEmpty) -1 else body.length)
-        if (body.nonEmpty) ex.getResponseBody.write(body)
-        ex.close()
-      } else {
-        val maxRv = if (store.isEmpty) 0L else store.lastKey()
-        val body =
-          s"""{"kind":"EventList","metadata":{"resourceVersion":"$maxRv"},
-             |"items":[${store.values.asScala.mkString(",")}]}""".stripMargin
-            .getBytes("UTF-8")
-        ex.sendResponseHeaders(200, body.length)
-        ex.getResponseBody.write(body)
-        ex.close()
-      }
-    })
-    srv.start()
-    def url: String = s"http://127.0.0.1:${srv.getAddress.getPort}"
-    def put(rv: Long, uid: String): Unit = store.put(rv, eventJson(rv, uid))
-    def stop(): Unit = srv.stop(0)
-  }
-
   private def awaitTrue(timeoutMs: Long)(cond: => Boolean): Boolean = {
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     while (!cond && System.nanoTime() < deadline) Thread.sleep(25)
@@ -132,15 +118,15 @@ class K8sSourceSpec extends SparkSpec {
 
   test("HttpWatchClient: LIST seeds, WATCH streams, resync catches up, " +
     "fetch slices by rv, bearer token rides every request") {
-    val srv = new StubApiServer
-    srv.put(1, "a"); srv.put(2, "b")
+    val srv = new StubApiServer("/api/v1/events")
+    srv.put(1, eventJson(1, "a")); srv.put(2, eventJson(2, "b"))
     val client = graft.sources.k8s.HttpWatchClient.events(srv.url,
       token = Some("tok-1"), resyncBackoffMs = 50)
     try {
       assert(awaitTrue(10000)(client.latestRv() == 2L),
         s"LIST+WATCH should reach rv=2, got ${client.latestRv()}")
       // appended event arrives via a later watch/resync cycle
-      srv.put(5, "c")
+      srv.put(5, eventJson(5, "c"))
       assert(awaitTrue(10000)(client.latestRv() == 5L))
       val all = client.fetch(0, 5)
       assert(all.map(_.uid) == Seq("a", "b", "c"))
@@ -158,23 +144,20 @@ class K8sSourceSpec extends SparkSpec {
 
   test("decodeEvent: unusable records (no uid / non-numeric rv) are skipped," +
     " absent count maps to None") {
-    val srv = new StubApiServer
     import graft.sources.k8s.HttpWatchClient.decodeEvent
-    try {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      assert(decodeEvent(m.readTree(eventJson(3, "ok"))).exists(_._1 == 3L))
-      assert(decodeEvent(m.readTree(
-        """{"metadata":{"resourceVersion":"4"}}""")).isEmpty)
-      assert(decodeEvent(m.readTree(
-        """{"metadata":{"uid":"u","resourceVersion":"abc123xyz"}}""")).isEmpty)
-      val noCount = eventJson(6, "nc").replace(""","count":1""", "")
-      assert(decodeEvent(m.readTree(noCount)).exists(_._2.count.isEmpty))
-    } finally srv.stop()
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(decodeEvent(m.readTree(eventJson(3, "ok"))).exists(_._1 == 3L))
+    assert(decodeEvent(m.readTree(
+      """{"metadata":{"resourceVersion":"4"}}""")).isEmpty)
+    assert(decodeEvent(m.readTree(
+      """{"metadata":{"uid":"u","resourceVersion":"abc123xyz"}}""")).isEmpty)
+    val noCount = eventJson(6, "nc").replace(""","count":1""", "")
+    assert(decodeEvent(m.readTree(noCount)).exists(_._2.count.isEmpty))
   }
 
   test("end-to-end: readStream over the live endpoint lands events in the sink") {
-    val srv = new StubApiServer
-    srv.put(1, "e1"); srv.put(2, "e2")
+    val srv = new StubApiServer("/api/v1/events")
+    srv.put(1, eventJson(1, "e1")); srv.put(2, eventJson(2, "e2"))
     val q = spark.readStream
       .format(classOf[K8sEventSource].getName)
       .option("endpoint", srv.url)
@@ -186,7 +169,7 @@ class K8sSourceSpec extends SparkSpec {
         q.processAllAvailable()
         spark.table("k8slive").count() == 2L
       }, "both listed events should land")
-      srv.put(7, "e3") // arrives via watch/resync, next micro-batch picks it up
+      srv.put(7, eventJson(7, "e3")) // arrives via watch/resync, next micro-batch picks it up
       assert(awaitTrue(30000) {
         q.processAllAvailable()
         spark.table("k8slive").count() == 3L
@@ -199,8 +182,8 @@ class K8sSourceSpec extends SparkSpec {
 
   test("admission control: maxEventsPerTrigger caps each micro-batch; " +
     "every event still lands exactly once") {
-    val srv = new StubApiServer
-    for (i <- 1 to 6) srv.put(i.toLong, s"a$i")
+    val srv = new StubApiServer("/api/v1/events")
+    for (i <- 1 to 6) srv.put(i.toLong, eventJson(i.toLong, s"a$i"))
     val q = spark.readStream
       .format(classOf[K8sEventSource].getName)
       .option("endpoint", srv.url)
@@ -228,8 +211,9 @@ class K8sSourceSpec extends SparkSpec {
 
   test("rvAfter: admission cursor walks at most maxCount buffered rvs, " +
     "falls through to latestRv when fewer remain") {
-    val srv = new StubApiServer
-    srv.put(10, "x1"); srv.put(20, "x2"); srv.put(30, "x3")
+    val srv = new StubApiServer("/api/v1/events")
+    srv.put(10, eventJson(10, "x1")); srv.put(20, eventJson(20, "x2"))
+    srv.put(30, eventJson(30, "x3"))
     val client = graft.sources.k8s.HttpWatchClient.events(srv.url,
       resyncBackoffMs = 50)
     try {
@@ -353,29 +337,11 @@ class K8sSourceSpec extends SparkSpec {
   test("runLive: the config file ALONE stands up the live pipeline — " +
     "kubeconfig resolves endpoint+token+namespace, resync_interval " +
     "reaches the client's relist knob") {
-    val lists = new java.util.concurrent.atomic.AtomicInteger(0)
-    val auth = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val srv = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     // namespaced path: proves the kubeconfig context namespace reached
     // the client's URL construction
-    srv.createContext("/api/v1/namespaces/payments/events", { ex =>
-      auth.add(Option(ex.getRequestHeaders.getFirst("Authorization")).getOrElse(""))
-      val query = Option(ex.getRequestURI.getQuery).getOrElse("")
-      val body =
-        if (query.contains("watch=true")) Array.empty[Byte]
-        else {
-          lists.incrementAndGet()
-          (s"""{"kind":"EventList","metadata":{"resourceVersion":"2"},""" +
-            s""""items":[${eventJson(1, "live1")},${eventJson(2, "live2")}]}""")
-            .getBytes("UTF-8")
-        }
-      ex.sendResponseHeaders(200, if (body.isEmpty) -1 else body.length)
-      if (body.nonEmpty) ex.getResponseBody.write(body)
-      ex.close()
-    })
-    srv.start()
-    val base = s"http://127.0.0.1:${srv.getAddress.getPort}"
+    val srv = new StubApiServer("/api/v1/namespaces/payments/events")
+    srv.put(1, eventJson(1, "live1")); srv.put(2, eventJson(2, "live2"))
+    val base = srv.url
     val kcPath = java.nio.file.Files.createTempFile("kubeconfig", ".yaml")
     java.nio.file.Files.write(kcPath,
       s"""apiVersion: v1
@@ -421,8 +387,8 @@ class K8sSourceSpec extends SparkSpec {
         "config" -> mainCfgPath.toString, "endpoint" -> base,
         "token" -> "live-tok", "namespace" -> "payments"))))
     try for ((input, start) <- inputs) {
-      lists.set(0)
-      auth.clear()
+      srv.lists.set(0)
+      srv.authSeen.clear()
       graft.sinks.MemoryBatchSink.clear("liveuid")
       val q = start()
       try {
@@ -433,49 +399,36 @@ class K8sSourceSpec extends SparkSpec {
         val lines = graft.sinks.MemoryBatchSink.batches("liveuid").flatMap(_._2).flatten
         assert(lines.exists(_.contains("\"id\":\"live1\"")), lines.mkString("\n"))
         // kubeconfig token rode the requests
-        assert(auth.peek() == "Bearer live-tok", s"$input: auth seen: $auth")
+        assert(srv.authSeen.peek() == "Bearer live-tok",
+          s"$input: auth seen: ${srv.authSeen}")
         // resync_interval=1s → relistIntervalMs=1000 reached the client:
         // the LIST count keeps growing (without the knob there is exactly
         // one LIST, because clean watch closes re-WATCH)
-        assert(awaitTrue(15000)(lists.get() >= 3),
-          s"$input: periodic relist should re-LIST, got ${lists.get()}")
+        assert(awaitTrue(15000)(srv.lists.get() >= 3),
+          s"$input: periodic relist should re-LIST, got ${srv.lists.get()}")
       } finally q.stop()
-    } finally srv.stop(0)
+    } finally srv.stop()
   }
 
   test("service source honours resyncBackoffMs: one WATCH in the 3 s " +
     "after the first clean close") {
-    val watches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val srv = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    srv.createContext("/api/v1/services", { ex =>
-      val query = Option(ex.getRequestURI.getQuery).getOrElse("")
-      val body =
-        if (query.contains("watch=true")) {
-          watches.incrementAndGet()
-          Array.empty[Byte] // clean close at once
-        } else
-          (s"""{"kind":"ServiceList","metadata":{"resourceVersion":"3"},""" +
-            s""""items":[${serviceJson(3, "s1", "web")}]}""").getBytes("UTF-8")
-      ex.sendResponseHeaders(200, if (body.isEmpty) -1 else body.length)
-      if (body.nonEmpty) ex.getResponseBody.write(body)
-      ex.close()
-    })
-    srv.start()
+    // nothing above the listed rv 3: every WATCH closes cleanly at once
+    val srv = new StubApiServer("/api/v1/services")
+    srv.put(3, serviceJson(3, "s1", "web"))
     val q = spark.readStream
       .format("graft.sources.k8s.K8sServiceSource")
-      .option("endpoint", s"http://127.0.0.1:${srv.getAddress.getPort}")
+      .option("endpoint", srv.url)
       .option("resyncBackoffMs", "60000")
       .load()
       .writeStream.format("memory").queryName("svcbackoff")
       .start()
     try {
-      assert(awaitTrue(30000)(watches.get() >= 1), "the first WATCH never opened")
+      assert(awaitTrue(30000)(srv.watches.get() >= 1), "the first WATCH never opened")
       Thread.sleep(3000)
       // the 1 s default backoff would have re-WATCHed twice by now
-      assert(watches.get() == 1,
-        s"re-WATCH before resyncBackoffMs=60000 elapsed: ${watches.get()} WATCHes")
-    } finally { q.stop(); srv.stop(0) }
+      assert(srv.watches.get() == 1,
+        s"re-WATCH before resyncBackoffMs=60000 elapsed: ${srv.watches.get()} WATCHes")
+    } finally { q.stop(); srv.stop() }
   }
 
   // ------------------------------- live SERVICE watch (the S2 half) --
@@ -486,43 +439,6 @@ class K8sSourceSpec extends SparkSpec {
        |  "annotations":{"team":"core"}},
        | "spec":{"selector":{"app":"$name"}}}""".stripMargin
       .replaceAll("\n\\s*", "")
-
-  /** Stub serving /api/v1/services with the same LIST/WATCH contract. */
-  private class StubServiceServer {
-    val store = new java.util.concurrent.ConcurrentSkipListMap[Long, String]()
-    private val srv = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    srv.createContext("/api/v1/services", { ex =>
-      val query = Option(ex.getRequestURI.getQuery).getOrElse("")
-      import scala.jdk.CollectionConverters._
-      if (query.contains("watch=true")) {
-        val fromRv = query.split("&").collectFirst {
-          case kv if kv.startsWith("resourceVersion=") =>
-            kv.substring("resourceVersion=".length).toLong
-        }.getOrElse(0L)
-        val lines = store.tailMap(fromRv, false).values.asScala
-          .map(j => s"""{"type":"MODIFIED","object":$j}""").mkString("\n")
-        val body = (if (lines.isEmpty) "" else lines + "\n").getBytes("UTF-8")
-        ex.sendResponseHeaders(200, if (body.isEmpty) -1 else body.length)
-        if (body.nonEmpty) ex.getResponseBody.write(body)
-        ex.close()
-      } else {
-        val maxRv = if (store.isEmpty) 0L else store.lastKey()
-        val body =
-          s"""{"kind":"ServiceList","metadata":{"resourceVersion":"$maxRv"},
-             |"items":[${store.values.asScala.mkString(",")}]}""".stripMargin
-            .getBytes("UTF-8")
-        ex.sendResponseHeaders(200, body.length)
-        ex.getResponseBody.write(body)
-        ex.close()
-      }
-    })
-    srv.start()
-    def url: String = s"http://127.0.0.1:${srv.getAddress.getPort}"
-    def put(rv: Long, uid: String, name: String): Unit =
-      store.put(rv, serviceJson(rv, uid, name))
-    def stop(): Unit = srv.stop(0)
-  }
 
   test("live DEPLOYMENTS watch end-to-end (E5): apps/v1 group path, " +
     "selector decoded from spec.selector.matchLabels, matchExpressions-" +
@@ -591,10 +507,10 @@ class K8sSourceSpec extends SparkSpec {
   test("live service source end-to-end: LIST+WATCH services through the " +
     "D2 versioned dedup (the reference's service-informer path)") {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
-    val srv = new StubServiceServer
+    val srv = new StubApiServer("/api/v1/services", watchType = "MODIFIED")
     // same uid, three resourceVersions — only strictly newer must pass D2
-    srv.put(3, "s1", "web")
-    srv.put(7, "s1", "web")
+    srv.put(3, serviceJson(3, "s1", "web"))
+    srv.put(7, serviceJson(7, "s1", "web"))
     val src = spark.readStream
       .format("graft.sources.k8s.K8sServiceSource")
       .option("endpoint", srv.url)
@@ -609,7 +525,7 @@ class K8sSourceSpec extends SparkSpec {
         q.processAllAvailable()
         spark.table("k8ssvc").count() >= 2L
       }, "both versions should land before the stale check")
-      srv.put(9, "s2", "db") // new service arrives via watch/resync
+      srv.put(9, serviceJson(9, "s2", "db")) // new service arrives via watch/resync
       assert(awaitTrue(30000) {
         q.processAllAvailable()
         spark.table("k8ssvc").count() == 3L
@@ -629,8 +545,8 @@ class K8sSourceSpec extends SparkSpec {
 
   test("service source admission control: maxEventsPerTrigger caps each " +
     "micro-batch; every update still lands exactly once") {
-    val srv = new StubServiceServer
-    for (i <- 1 to 6) srv.put(i.toLong, s"s$i", s"svc$i")
+    val srv = new StubApiServer("/api/v1/services", watchType = "MODIFIED")
+    for (i <- 1 to 6) srv.put(i.toLong, serviceJson(i.toLong, s"s$i", s"svc$i"))
     val q = spark.readStream
       .format("graft.sources.k8s.K8sServiceSource")
       .option("endpoint", srv.url)

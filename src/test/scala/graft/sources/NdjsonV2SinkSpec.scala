@@ -65,10 +65,14 @@ class NdjsonV2SinkSpec extends SparkSpec {
 
   test("failed job publishes nothing and cleans its staging") {
     val dir = Files.createTempDirectory("ndjv2").toString + "/out"
-    val df = Seq("ok1", "BOOM", "ok2").toDF("value")
+    // The BOOM row fails the write task itself (repartition keeps the
+    // projection out of local-relation folding on the driver), so the
+    // writer's abort path runs.
+    val df = Seq("ok1", "BOOM", "ok2").toDF("value").repartition(1)
+      .select(when(col("value") === "BOOM", raise_error(lit("injected failure")))
+        .otherwise(col("value")).as("value"))
     intercept[Exception] {
-      df.write.format(fmt).option("path", dir)
-        .option("failOnContains", "BOOM").mode("overwrite").save()
+      df.write.format(fmt).option("path", dir).mode("overwrite").save()
     }
     val names = listNames(dir)
     assert(!names.exists(_.startsWith("part-")), s"published: $names")

@@ -1,14 +1,15 @@
 package graft.tools
 
 import graft.k8s.{GraftConfig, KubeNode, KubeObject, KubePod}
+import graft.sources.StubApiServer
 import graft.streaming.{Heartbeat, StreamPipeline}
 import org.apache.spark.sql.SparkSession
 
 /** Live-HTTP soak harness for BOTH halves of the watch pipeline — the
-  * datapoints file replay cannot produce, as a library-scope runner so
-  * [[graft.Bench]] can record them machine-readably every round
-  * (`live_eps` / `service_eps` in BENCH_DETAIL.json) instead of a
-  * prose row in COVERAGE.md.
+  * datapoints file replay cannot produce. LiveSoakSpec runs it at small
+  * scale to check that each half lands exactly the eligible records;
+  * perfbench's `event_ingest` and `service_churn` workloads time the
+  * same pipelines.
   *
   * Event half (reference main.go:88-90 event informer): stub API
   * server → HttpWatchClient LIST+WATCH → K8sEventSource micro-batches
@@ -20,13 +21,13 @@ import org.apache.spark.sql.SparkSession
   * K8sServiceSource (WatchedService carrier) → fMGWS tagged version
   * gate → P4 projection with the selector-matched pod map → sink.
   *
-  * The stub server is the same scripted LIST/WATCH shape as
-  * K8sSourceSpec's: WATCH streams buffered lines above the requested
-  * rv in ≤50k-line chunks then closes (the client's resync loop
-  * reconnects — included in the measured path); LIST returns the full
-  * store with its max rv. Metric = SUSTAINED events/s from query start
-  * to last eligible record landed while a feeder thread keeps
-  * appending at far-above-consumption offered load.
+  * The stub server is [[graft.sources.StubApiServer]], the one K8sSourceSpec
+  * uses: WATCH streams buffered lines above the requested rv in ≤50k-line
+  * chunks then closes (the client's resync loop reconnects — included in
+  * the measured path); LIST returns the full store with its max rv.
+  * Metric = SUSTAINED events/s from query start to last eligible record
+  * landed while a feeder thread keeps appending at far-above-consumption
+  * offered load.
   */
 object LiveSoak {
 
@@ -36,8 +37,8 @@ object LiveSoak {
     * ramp (stream start, LIST, first-batch codegen/JIT: ~8 s on this
     * harness, profiled round 15), so it is N-dependent and understates
     * the pipeline on small soaks. `sustainedEps` is the steady-state
-    * rate over the first-landed → last-landed window — the number the
-    * BASELINE.md §B.1 floor is pinned against. */
+    * rate over the first-landed → last-landed window — the number
+    * LiveSoakSpec's CI-safe floor is pinned against. */
   final case class SoakResult(landed: Long, offered: Int, secs: Double,
       heartbeats: Int, firstN: Long = 0L, firstSecs: Double = 0.0) {
     def eps: Long = if (secs > 0) (landed / secs).toLong else 0L
@@ -45,57 +46,6 @@ object LiveSoak {
       if (secs > firstSecs && landed > firstN)
         ((landed - firstN) / (secs - firstSecs)).toLong
       else eps
-  }
-
-  /** Scripted LIST+WATCH stub serving /api/v1/events and
-    * /api/v1/services from rv-keyed (watchType, objectJson) stores. */
-  final class StubApiServer {
-    import scala.jdk.CollectionConverters._
-    type Store = java.util.concurrent.ConcurrentSkipListMap[Long, (String, String)]
-    val events: Store = new Store
-    val services: Store = new Store
-    private val srv = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    private val pool = java.util.concurrent.Executors.newFixedThreadPool(4,
-      r => { val t = new Thread(r, "soak-stub-http"); t.setDaemon(true); t })
-    srv.setExecutor(pool)
-
-    private def handler(store: Store, listKind: String)
-        : com.sun.net.httpserver.HttpHandler = { ex =>
-      val query = Option(ex.getRequestURI.getQuery).getOrElse("")
-      if (query.contains("watch=true")) {
-        val fromRv = query.split("&").collectFirst {
-          case kv if kv.startsWith("resourceVersion=") =>
-            kv.substring("resourceVersion=".length).toLong
-        }.getOrElse(0L)
-        // Chunked watch responses (a real API server chunks too) — the
-        // client reconnects for the rest, so the resync loop is
-        // exercised continuously and no response materializes the
-        // whole backlog as one string.
-        val lines = store.tailMap(fromRv, false).values.asScala
-          .take(50000)
-          .map { case (t, j) => s"""{"type":"$t","object":$j}""" }
-          .mkString("\n")
-        val body = (if (lines.isEmpty) "" else lines + "\n").getBytes("UTF-8")
-        ex.sendResponseHeaders(200, if (body.isEmpty) -1 else body.length)
-        if (body.nonEmpty) ex.getResponseBody.write(body)
-        ex.close()
-      } else {
-        val maxRv = if (store.isEmpty) 0L else store.lastKey()
-        val body =
-          s"""{"kind":"$listKind","metadata":{"resourceVersion":"$maxRv"},
-             |"items":[${store.values.asScala.map(_._2).mkString(",")}]}"""
-            .stripMargin.getBytes("UTF-8")
-        ex.sendResponseHeaders(200, body.length)
-        ex.getResponseBody.write(body)
-        ex.close()
-      }
-    }
-    srv.createContext("/api/v1/events", handler(events, "EventList"))
-    srv.createContext("/api/v1/services", handler(services, "ServiceList"))
-    srv.start()
-    def url: String = s"http://127.0.0.1:${srv.getAddress.getPort}"
-    def stop(): Unit = { srv.stop(0); pool.shutdownNow() }
   }
 
   def eventJson(rv: Long, uid: String, ns: String): String =
@@ -129,14 +79,14 @@ object LiveSoak {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "8")
     import ss.implicits._
-    val srv = new StubApiServer
+    val srv = new StubApiServer("/api/v1/events")
     try {
       // ~5% in a blacklisted namespace so the eligibility filter
       // genuinely filters; the rest enrich against the dims below.
       val expectEligible = (1 to total).count(_ % 20 != 0)
       val lines = (1 to total).map { i =>
         val ns = if (i % 20 == 0) "kube-system" else "default"
-        (i.toLong, ("ADDED", eventJson(i.toLong, s"u$i", ns)))
+        i.toLong -> eventJson(i.toLong, s"u$i", ns)
       }
       val objects = Seq(KubeObject("o1", "Pod", "default", "w",
         Map("app" -> "w"), Map(),
@@ -167,7 +117,7 @@ object LiveSoak {
       def landed(): Long = graft.sinks.MemoryBatchSink.batches("soak")
         .iterator.flatMap(_._2).map(_.size.toLong).sum
       val t0 = System.nanoTime()
-      val feeder = feed(lines, srv.events, chunk)
+      val feeder = feed(lines, srv, chunk)
       val (secs, firstN, firstSecs) =
         await(q, () => landed(), expectEligible, t0)
       feeder.join(1000)
@@ -188,12 +138,12 @@ object LiveSoak {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "8")
     import ss.implicits._
-    val srv = new StubApiServer
+    val srv = new StubApiServer("/api/v1/services", watchType = "MODIFIED")
     try {
       val expectEligible = (1 to total).count(_ % 20 != 0)
       val lines = (1 to total).map { i =>
         val ns = if (i % 20 == 0) "kube-system" else "default"
-        (i.toLong, ("MODIFIED", serviceJson(i.toLong, s"s${i % uids}", ns)))
+        i.toLong -> serviceJson(i.toLong, s"s${i % uids}", ns)
       }
       val pods = Seq(KubePod("p1", "web-0", "default", Map("app" -> "w"),
         java.sql.Timestamp.valueOf("2024-01-01 09:00:00"),
@@ -218,7 +168,7 @@ object LiveSoak {
       def landed(): Long = graft.sinks.MemoryBatchSink.batches("svcsoak")
         .iterator.flatMap(_._2).map(_.size.toLong).sum
       val t0 = System.nanoTime()
-      val feeder = feed(lines, srv.services, chunk)
+      val feeder = feed(lines, srv, chunk)
       val (secs, firstN, firstSecs) =
         await(q, () => landed(), expectEligible, t0)
       feeder.join(1000)
@@ -228,12 +178,11 @@ object LiveSoak {
   }
 
   /** Sustained drip at offered load far above consumption. */
-  private def feed(lines: Seq[(Long, (String, String))],
-      store: java.util.concurrent.ConcurrentSkipListMap[Long, (String, String)],
+  private def feed(lines: Seq[(Long, String)], srv: StubApiServer,
       chunk: Int): Thread = {
     val t = new Thread(() => {
       lines.grouped(chunk).foreach { g =>
-        g.foreach { case (rv, v) => store.put(rv, v) }
+        g.foreach { case (rv, j) => srv.put(rv, j) }
         Thread.sleep(25)
       }
     }, "soak-feeder")

@@ -2,13 +2,11 @@ package graft.tools
 
 import graft.SparkSpec
 
-/** Smoke laws for the LiveSoak harness Bench records `live_eps` /
-  * `service_eps` through: at small scale, both halves must land
-  * EXACTLY the eligible record count (the 1-in-20 skip-namespace
-  * lines filtered, everything else exactly once through the full
-  * watch → gate → enrich/project → memory-sink path) — a harness
-  * that over- or under-counts would corrupt the bench artifact
-  * silently. */
+/** Smoke laws for the LiveSoak harness: at small scale, both halves
+  * must land EXACTLY the eligible record count (the 1-in-20
+  * skip-namespace lines filtered, everything else exactly once through
+  * the full watch → gate → enrich/project → memory-sink path) — a
+  * pipeline that over- or under-counts on the live path fails here. */
 class LiveSoakSpec extends SparkSpec {
 
   test("event-half soak lands exactly the eligible events") {
@@ -31,12 +29,14 @@ class LiveSoakSpec extends SparkSpec {
     * start + first-batch codegen dominating a 100k-event soak, plus
     * end-of-bench heap pressure), profiled and fixed in round 15 by
     * recording the SUSTAINED first-landed→last-landed rate from a
-    * multi-batch steady state. The artifact gate is live_eps ≥ 10,000
-    * in BENCH_DETAIL.json (BASELINE.md §B.1; quiet-host measure:
-    * ~11.4k). This spec pins a CI-SAFE floor — an order of magnitude
-    * of slack for test-JVM load — so a real pipeline regression (the
-    * kind that would sink the artifact toward the reference's 333 eps
-    * envelope) fails `sbt test` loudly instead of drifting. */
+    * multi-batch steady state. graft.Bench recorded that rate as
+    * `live_eps` until the field was retired in favour of perfbench's
+    * `event_ingest` workload (BASELINE.md §B.1; quiet-host measure was
+    * ~11.4k against a 10,000 gate). This spec pins a CI-SAFE floor — an
+    * order of magnitude of slack for test-JVM load — so a real pipeline
+    * regression (the kind that would sink the rate toward the
+    * reference's 333 eps envelope) fails `sbt test` loudly instead of
+    * drifting. */
   test("event-half sustained eps stays above the CI-safe floor; " +
     "ramp snapshot bounds the first batch") {
     val total = 45000 // > 2 admission-capped batches (cap 20k)
