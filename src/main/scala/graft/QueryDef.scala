@@ -2,29 +2,22 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One declared engine query: a Spark-first implementation plus (usually)
-  * a DuckDB oracle twin (SURVEY.md §2.2 "the t2 contract").
+/** One declared engine query: a Spark-first implementation plus its
+  * DuckDB oracle twin (SURVEY.md §2.2 "the t2 contract").
   *
   * Contract notes (driver semantics):
   *  - Output column names must match the oracle's exactly (the driver
   *    sorts columns by name before hashing values).
   *  - Every query ends in an ORDER BY over a unique key in BOTH dialects.
   *  - Doubles are rounded to 4 decimals; timestamps rendered as strings.
-  *  - `oracle = None` ⇒ driver records a weaker rows-only check (used for
-  *    approximate/hash-implementation-specific operators only).
   */
-final case class Q(
-    name: String,
-    oracle: Option[String],
-    run: (SparkSession, String) => DataFrame)
+final case class Q(name: String, oracle: String)(
+    val run: (SparkSession, String) => DataFrame)
 
 object Q {
   def apply(name: String, oracle: String)(
       run: (SparkSession, String) => DataFrame): Q =
-    Q(name, Some(oracle.stripMargin.trim), run)
-
-  def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Q =
-    Q(name, None, run)
+    new Q(name, oracle.stripMargin.trim)(run)
 }
 
 /** Per-query session scoping. Iterative operators (CC, PageRank,

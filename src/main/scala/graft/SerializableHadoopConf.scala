@@ -10,8 +10,8 @@ import org.apache.hadoop.conf.Configuration
   * sides, exactly as Spark's built-in file writers propagate it.
   * `new Configuration()` on an executor would silently drop all of those
   * (fine on local FS, wrong everywhere else). Used by the NDJSON sink
-  * (graft.sinks.NdjsonSink) and the DSv2 batch connector
-  * (graft.sources.ndjson.NdjsonWriteSource). */
+  * (graft.sinks.NdjsonSink) and the DSv2 batch connector, which both
+  * publish through [[StagedPublish]] on the FileSystem it resolves. */
 private[graft] class SerializableHadoopConf(@transient var value: Configuration)
     extends Serializable {
   private def writeObject(out: java.io.ObjectOutputStream): Unit =

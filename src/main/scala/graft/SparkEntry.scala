@@ -6,8 +6,8 @@ import graft.queries._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every implemented operator from SURVEY.md §2 is a named entry in
-  * [[queries]]; entries with a DuckDB oracle twin appear in [[oracleSql]]
-  * (the driver hash-compares both at sf0.01). Queries are assembled from
+  * [[queries]], and its DuckDB oracle twin is in [[oracleSql]] (the
+  * driver hash-compares both at sf0.01). Queries are assembled from
   * the per-category modules under graft.queries.
   */
 object SparkEntry {
@@ -30,7 +30,7 @@ object SparkEntry {
     modules.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    modules.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    modules.map(q => q.name -> q.oracle).toMap
 }

@@ -92,7 +92,6 @@ object BehaviorQueries {
         |    AS n_users,
         |  CAST(sum(k) AS BIGINT) AS n_matches
         |FROM m GROUP BY 1 ORDER BY pattern""") { (s, d) =>
-      import s.implicits._
       val j = Tables.events(s, d)
         .withColumn("ch", substring(col("event_type"), 1, 1))
         .groupBy(col("user_id"))

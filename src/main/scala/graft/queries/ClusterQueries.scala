@@ -30,8 +30,8 @@ import org.apache.spark.storage.StorageLevel
   * output (graph_bipartite_truncation). 256 ⇒ ≤ 32,640 pairs per center
   * worst-case; the shipped fixtures' max degrees (53 bipartite / 15
   * co-purchase at sf0.1) never reach it, so fixture hashes are
-  * cap-invariant, and the planted hot-part fixture (ScaleUp --hotpart)
-  * is what exercises the guard. */
+  * cap-invariant, and Round12OpsSpec's `wedge cap excises a planted
+  * over-degree part …` is what exercises the guard. */
 private[queries] object GraphConfig {
   val WedgeCap = 256
 }
@@ -1241,9 +1241,9 @@ object ClusterQueries {
     // oracle-verified output: `graph_bipartite_truncation` reports every
     // capped part with its suppressed-pair count, so a production run
     // sees exactly what the cap dropped. At the shipped fixtures the max
-    // part degree is 53 (sf0.1), so the cap never binds there; the
-    // planted hot-part ScaleUp fixture (tools/ScaleUp --hotpart) is what
-    // exercises it — see COVERAGE.md's hot-key table. Customer degrees
+    // part degree is 53 (sf0.1), so the cap never binds there; the test
+    // that plants a hot part (Round12OpsSpec's `wedge cap excises a
+    // planted over-degree part …`) is what exercises it. Customer degrees
     // (for Jaccard) still come from the UNCAPPED relation, so scores of
     // surviving pairs are exact, not conditioned on the cap. Support
     // ≥ 3 bounds the emitted pair relation.

@@ -106,7 +106,6 @@ object K8sQueries {
         |  FROM events)
         |GROUP BY user_id, chunk
         |ORDER BY user_id, chunk""") { (s, d) =>
-      val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       Tables.events(s, d)
         .withColumn("chunk", expr("CAST((row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1) div 100 AS INT)"))
         .groupBy(col("user_id"), col("chunk"))

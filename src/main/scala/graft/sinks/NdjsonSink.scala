@@ -1,7 +1,7 @@
 package graft.sinks
 
-import graft.SerializableHadoopConf
-import java.io.{BufferedOutputStream, ByteArrayOutputStream, IOException}
+import graft.{SerializableHadoopConf, StagedPublish}
+import java.io.{BufferedOutputStream, ByteArrayOutputStream}
 import java.util.zip.GZIPOutputStream
 import org.apache.hadoop.fs.Path
 import org.apache.spark.{Partitioner, TaskContext}
@@ -48,9 +48,9 @@ object NdjsonSink {
     *    partition; the members shuffle to `files` writers, and writer k
     *    concatenates them in partition order into a file staged under
     *    its task attempt's name.
-    *  - The driver publishes each file with one rename (a failed rename
-    *    raises an `IOException` naming the path) and always removes the
-    *    staging directory. */
+    *  - The driver publishes through graft.StagedPublish: a re-run keeps
+    *    the old files until the new ones are in place, and a failed
+    *    rename raises an `IOException` naming the path. */
   def write(batch: DataFrame, dir: String, uid: String, batchId: Long,
       batchSize: Int, gzip: Boolean = false): Int = {
     val lines = batch.select(to_json(struct(batch.columns.map(col): _*)))
@@ -68,11 +68,10 @@ object NdjsonSink {
       val fs = dirPath.getFileSystem(hconf.value)
       // Qualified, so executors resolve the same location as the driver.
       val target = fs.makeQualified(dirPath)
-      val staging = new Path(target, "_temporary").toString
       val ext = if (gzip) ".log.gz" else ".log"
-      fs.delete(target, true)
-      try {
-        val staged = lines
+      // Tagged by batch id, so a re-run also clears a crashed run's staging.
+      StagedPublish(fs, target, batchId.toString, replace = true) { staging =>
+        lines
           .mapPartitionsWithIndex { (p, rows) =>
             val all = rows.toArray
             val k0 = (starts(p) / batchSize).toInt
@@ -91,17 +90,11 @@ object NdjsonSink {
             val out = path.getFileSystem(hconf.value).create(path, true)
             try blocks.map(_._2).toArray.sortBy(_._1).foreach(m => out.write(m._2))
             finally out.close()
-            Iterator.single(k -> path.toString)
+            Iterator.single(path -> f"part-$k%05d$ext")
           }
-          .collect()
-        staged.foreach { case (k, src) =>
-          val dst = new Path(target, f"part-$k%05d$ext")
-          if (!fs.rename(new Path(src), dst))
-            throw new IOException(s"NdjsonSink: rename of $src to $dst failed")
-        }
-        fs.create(new Path(target, "_SUCCESS"), true).close()
-        files
-      } finally fs.delete(new Path(staging), true)
+          .collect().toSeq
+      }
+      files
     } finally lines.unpersist(blocking = false)
   }
 

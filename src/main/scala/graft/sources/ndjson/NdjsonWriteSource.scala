@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.SerializableHadoopConf
+import graft.{SerializableHadoopConf, StagedPublish}
 
 /** DataSourceV2 BATCH WRITE connector for gzip NDJSON — the engine-native
   * twin of the reference's S3 flusher (io/flush_s3.go:45-84: gzip NDJSON
@@ -21,9 +21,10 @@ import graft.SerializableHadoopConf
   *
   * Where the reference appends to S3 with at-least-once semantics
   * (README.md "Limitations": duplicates possible after restart), this
-  * connector writes every task to `_temporary/` and publishes files only
-  * in the driver-side job commit — a failed/speculative task attempt
-  * leaves nothing visible, and `abort()` removes all staged output.
+  * connector stages every task's files and publishes them only in the
+  * driver-side job commit (graft.StagedPublish) — a failed/speculative
+  * task attempt leaves nothing visible, and an overwrite keeps the old
+  * files until every new one is in place.
   *
   * Batch only: it is the backfill/one-shot writer
   * (`df.write.format("graft.sources.ndjson.NdjsonWriteSource")`, the
@@ -34,12 +35,12 @@ import graft.SerializableHadoopConf
   * Contract: input schema is exactly ONE string column (serialize with
   * to_json upstream — same discipline as the text/kafka sinks), so the
   * connector never touches Spark-internal JSON machinery. Output:
-  * `<path>/part-<partition>.log.gz` + `_SUCCESS` marker.
+  * `<path>/part-<partition>-<tag>-c<k>.log.gz` + `_SUCCESS` marker.
   *
   * Scale posture: one file per task streamed through GZIPOutputStream —
   * no row buffering; commit is O(files) driver-side renames (on object
   * stores a rename is a copy: production would use a manifest commit,
-  * noted on [[NdjsonBatchWrite.commit]]).
+  * noted on graft.StagedPublish).
   */
 class NdjsonWriteSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -94,8 +95,8 @@ private[ndjson] class NdjsonWriteBuilder(path: String, queryId: String,
   }
 }
 
-private[ndjson] case class NdjsonCommitMessage(tempPaths: Seq[String],
-    rows: Long) extends WriterCommitMessage
+private[ndjson] case class NdjsonCommitMessage(tempPaths: Seq[String])
+    extends WriterCommitMessage
 
 private[ndjson] class NdjsonBatchWrite(path: String, queryId: String,
     truncate: Boolean, opts: Map[String, String],
@@ -108,50 +109,18 @@ private[ndjson] class NdjsonBatchWrite(path: String, queryId: String,
     new NdjsonWriterFactory(path, tag,
       opts.getOrElse("maxrecordsperfile", "0").toLong, hconf)
 
-  /** Driver-side publish: optionally clear previous output (truncate =
-    * SaveMode.Overwrite), then rename every staged file into place and
-    * drop a _SUCCESS marker. On a rename-is-copy object store this loop
-    * becomes a manifest write (list of final object names) — the staged
-    * layout already supports that, only this method changes. */
+  private def root = new Path(path)
+
+  /** Staging and final names carry the query tag, so two APPEND jobs into
+    * one directory never clean up or overwrite each other's files. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(hconf.value)
-    if (truncate && fs.exists(root))
-      fs.listStatus(root).foreach { st =>
-        if (st.getPath.getName.startsWith("part-") ||
-          st.getPath.getName == "_SUCCESS") fs.delete(st.getPath, false)
-      }
-    // Final names carry a query-id tag: two APPEND jobs into the same
-    // directory must not collide on part indexes (a colliding
-    // fs.rename returns false SILENTLY — unchecked, that is data
-    // loss, not an error).
-    messages.collect { case NdjsonCommitMessage(tmps, rows) if rows > 0 =>
-      tmps.foreach { tmp =>
-        val src = new Path(tmp)
-        // part index from the staged name (part-<pid>-tid<tid>[-c<k>].log.gz)
-        val fin = src.getName.replaceAll("-tid\\d+", s"-$tag")
-        if (!fs.rename(src, new Path(root, fin)))
-          throw new java.io.IOException(s"commit rename failed: $src -> $fin")
-      }
-    }
-    // Staging is scoped per query (_temporary/<tag>), so cleaning up
-    // after THIS job can never remove a concurrent append job's
-    // staged-but-uncommitted files. The non-recursive delete of
-    // _temporary itself succeeds only when no other job is staging —
-    // exactly the race-safe cleanup semantics wanted.
-    fs.delete(new Path(root, s"_temporary/$tag"), true)
-    try fs.delete(new Path(root, "_temporary"), false)
-    catch { case _: java.io.IOException => () }
-    fs.create(new Path(root, "_SUCCESS"), true).close()
+    val staged = messages.toSeq.flatMap { case NdjsonCommitMessage(tmps) => tmps.map(new Path(_)) }
+      .map(src => src -> src.getName.replaceAll("-tid\\d+", s"-$tag"))
+    StagedPublish(root.getFileSystem(hconf.value), root, tag, truncate)(_ => staged)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(hconf.value)
-    fs.delete(new Path(root, s"_temporary/$tag"), true)
-    try fs.delete(new Path(root, "_temporary"), false)
-    catch { case _: java.io.IOException => () }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    StagedPublish.clean(root.getFileSystem(hconf.value), root, tag)
 }
 
 private[ndjson] class NdjsonWriterFactory(path: String, tag: String,
@@ -176,14 +145,13 @@ private[ndjson] class NdjsonDataWriter(path: String, tag: String,
     hconf: SerializableHadoopConf)
     extends DataWriter[InternalRow] {
 
-  private def chunkPath(k: Int) = new Path(path,
-    f"_temporary/$tag/part-$partitionId%05d-tid$taskId-c$k%03d.log.gz")
+  private def chunkPath(k: Int) = new Path(StagedPublish.staging(new Path(path), tag),
+    f"part-$partitionId%05d-tid$taskId-c$k%03d.log.gz")
   private val fs = chunkPath(0).getFileSystem(hconf.value)
   private var chunk = 0
   private var temp = chunkPath(0)
   private var out = new GZIPOutputStream(fs.create(temp, true))
   private var rowsInChunk = 0L
-  private var total = 0L
   private val done = scala.collection.mutable.ListBuffer.empty[String]
 
   private def roll(): Unit = {
@@ -202,14 +170,13 @@ private[ndjson] class NdjsonDataWriter(path: String, tag: String,
       out.write(line.getBytes)
       out.write('\n')
       rowsInChunk += 1
-      total += 1
     }
   }
 
   override def commit(): WriterCommitMessage = {
     out.close()
     if (rowsInChunk == 0) fs.delete(temp, false) else done += temp.toString
-    NdjsonCommitMessage(done.toList, total)
+    NdjsonCommitMessage(done.toList)
   }
 
   override def abort(): Unit = {

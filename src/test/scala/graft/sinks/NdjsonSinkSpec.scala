@@ -48,6 +48,11 @@ class NdjsonSinkSpec extends SparkSpec {
     assert(files == 3)
     val counts = lineCounts(s"$tmp/u1_7").sorted
     assert(counts == Seq(4, 5, 5))
+    // A re-run of the same batch with fewer rows leaves only its own file.
+    assert(NdjsonSink.write(df.limit(4), tmp, "u1", 7L, batchSize = 5) == 1)
+    val names = new java.io.File(s"$tmp/u1_7").list().filterNot(_.startsWith(".")).sorted
+    assert(names.toSeq == Seq("_SUCCESS", "part-00000.log"), names.mkString(", "))
+    assert(lineCounts(s"$tmp/u1_7") == Seq(4))
   }
 
   test("W2: every line is a standalone JSON object with the row's fields") {
@@ -124,6 +129,20 @@ class NdjsonSinkSpec extends SparkSpec {
       assert(!Files.exists(Paths.get(s"$tmp/u5_3/_temporary")), "staging left behind")
     } finally conf.unset("fs.norename.impl")
   }
+
+  test("a re-run replaces its files where rename refuses an existing file (HDFS)") {
+    val tmp = Files.createTempDirectory("ndjson").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.nooverwrite.impl", classOf[NoOverwriteRenameFileSystem].getName)
+    try {
+      val dir = s"nooverwrite://$tmp"
+      NdjsonSink.write((1 to 6).map(i => (i.toLong, s"a-$i")).toDF("id", "payload"), dir, "u7", 0L, batchSize = 5)
+      NdjsonSink.write((1 to 7).map(i => (i.toLong, s"b-$i")).toDF("id", "payload"), dir, "u7", 0L, batchSize = 5)
+      val back = spark.read.json(s"$tmp/u7_0").select("payload").as[String].collect().sorted
+      assert(back.toSeq == (1 to 7).map(i => s"b-$i").sorted)
+      assert(new java.io.File(s"$tmp/u7_0/_SUCCESS").exists)
+    } finally conf.unset("fs.nooverwrite.impl")
+  }
 }
 
 /** Local FS under its own scheme whose rename to a `.log` name reports
@@ -134,4 +153,13 @@ class NoLogRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean =
     !dst.getName.contains(".log") && super.rename(src, dst)
+}
+
+/** Local FS under its own scheme whose rename onto an existing file
+  * reports failure, as HDFS does (the local FS replaces the file). */
+class NoOverwriteRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("nooverwrite:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    !exists(dst) && super.rename(src, dst)
 }

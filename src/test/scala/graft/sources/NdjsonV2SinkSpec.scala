@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.file.Files
 
 import graft.SparkSpec
+import graft.sinks.NoLogRenameFileSystem
 import org.apache.spark.sql.functions._
 
 /** Commit-protocol behavior of the DataSourceV2 gzip-NDJSON writer:
@@ -46,6 +47,30 @@ class NdjsonV2SinkSpec extends SparkSpec {
     write(10, 2) // fewer parts: stale part-00005 must not survive
     assert(listNames(dir).count(_.startsWith("part-")) == 2)
     assert(spark.read.schema("id BIGINT").json(dir).count() == 10)
+  }
+
+  test("an overwrite that fails mid-commit keeps the previous output") {
+    val dir = Files.createTempDirectory("ndjv2").toString + "/out"
+    def write(path: String, n: Int, opts: Map[String, String]): Unit =
+      (1 to n).map(_.toLong).toDF("id")
+        .select(to_json(struct(col("id"))).as("value"))
+        .repartition(3)
+        .write.format(fmt).options(opts).option("path", path).mode("overwrite").save()
+    write(s"file://$dir", 30, Map.empty)
+    val before = listNames(dir).filter(_.startsWith("part-"))
+    assert(before.size == 3, s"first write: $before")
+    // Every rename to a .log name reports failure, so the commit fails
+    // once the new files are staged and before any of them is in place.
+    val e = intercept[java.io.IOException] {
+      write(s"norename://$dir", 5, Map("fs.norename.impl" -> classOf[NoLogRenameFileSystem].getName))
+    }
+    val names = listNames(dir)
+    assert(names.filter(_.startsWith("part-")) == before, s"left: $names")
+    assert(!names.contains("_SUCCESS"), s"left: $names")
+    assert(!names.contains("_temporary"), s"left: $names")
+    assert(e.getMessage.contains(s"$dir/part-"), e.getMessage)
+    val back = spark.read.schema("id BIGINT").json(dir).as[Long].collect().sorted
+    assert(back.toSeq == (1L to 30L))
   }
 
   test("two append jobs coexist: query-id-tagged names never collide") {

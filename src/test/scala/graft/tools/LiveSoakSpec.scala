@@ -51,6 +51,6 @@ class LiveSoakSpec extends SparkSpec {
       s"sustained=${r.sustainedEps} < whole-run=${r.eps}")
     assert(r.sustainedEps >= 1000,
       s"sustained live eps ${r.sustainedEps} fell below the CI-safe floor " +
-        "(artifact gate is >=10k on a quiet host — BASELINE.md §B.1)")
+        "(perfbench's event_ingest, not this spec, measures ingest throughput)")
   }
 }
